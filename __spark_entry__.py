@@ -56,6 +56,14 @@ from pyspark.sql.window import Window
 # the session before calling queries()), so the supported conf route
 # cannot win the race; setting the module cache directly IS the switch.
 # Results are unaffected: the flag only enriches error messages.
+# The cache is private: if a PySpark upgrade renames it, assigning it
+# would silently switch nothing, so that must fail loudly instead.
+if not hasattr(_pyspark_errors_utils, "_enable_debugging_cache"):
+    raise RuntimeError(
+        "pyspark.errors.utils._enable_debugging_cache is missing in this "
+        "PySpark version; update the DataFrame-debugging switch in "
+        "__spark_entry__.py"
+    )
 _pyspark_errors_utils._enable_debugging_cache = False
 
 

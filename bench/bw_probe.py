@@ -1,6 +1,6 @@
-"""Memory-bandwidth regime probe for the scaling-ladder protocol.
+"""Memory-bandwidth regime probe: a label for timing runs.
 
-The /proc/stat steal label (bench/ladder_pair.sh) catches CPU theft but
+A /proc/stat CPU-steal label catches CPU theft but
 not co-tenant *memory-bandwidth* contention, which is invisible to the
 guest and asymmetric: a 1-core run is barely affected while a 4-core
 run of the same job can lose 2-3x (observed 2026-08-17: back-to-back
@@ -20,10 +20,9 @@ label made for CPU theft. Two numbers, both GB/s:
   number that collapses when a co-tenant saturates the memory system
   while 1-core probes still read healthy.
 
-Usage: ``python bench/bw_probe.py`` → one JSON line. ladder_pair.sh
-runs it before each ladder run and stores both values in the run row;
-BENCH/BASELINE.md's clean-subset views can then condition on bandwidth
-as well as steal.
+Usage: ``python bench/bw_probe.py`` → one JSON line. ``perfbench/run.py``
+runs it at the start and end of each run and labels the result with it,
+so timing comparisons can condition on bandwidth as well as steal.
 """
 
 from __future__ import annotations

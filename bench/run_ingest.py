@@ -147,7 +147,6 @@ def main() -> None:
         events_df(spark, warm_spec, 4000, partitions=args.parallelism),
         batch_id="warmup",
         params=SOURCE_PARAMS,
-        udf_partitions=args.parallelism,
         collect_metrics=False,
     )
     shutil.rmtree(warm_dir, ignore_errors=True)
@@ -200,7 +199,6 @@ def main() -> None:
                 batch,
                 batch_id=f"bench-{b}",
                 params=SOURCE_PARAMS,
-                udf_partitions=parts,
                 collect_metrics=args.metrics,
             )
     elapsed = time.time() - t0

@@ -124,10 +124,6 @@ def _blocks_bytes(seeds: list[int]) -> bytes:
     return raw.tobytes()
 
 
-def _block_bytes(seed: int, k: int, block_idx: int, block_ver: int) -> bytes:
-    return _blocks_bytes([_h64(seed, k, block_idx, block_ver)])
-
-
 def content_at(spec: GenSpec, k: int, version: int) -> str:
     """Content of key ``k`` after its ``version``-th I/U event.
 

@@ -394,10 +394,10 @@ class LakeTable:
         # and couldn't grow past num_buckets on snapshots. Bucket
         # boundaries stay exact: the writer splits files by the
         # partitionBy value, and a bucket's rows hash to one partition.
-        # ``prepartitioned`` callers (apply_batch's AQE path) already
-        # partitioned the rows by (bucket, salt) BEFORE the chunking
+        # ``prepartitioned`` (append_delta): apply_batch already
+        # partitioned the rows by (bucket, salt) before the chunking
         # UDF, so the payload is not exchanged a second time here —
-        # each bucket then spans at most salt_buckets partitions, i.e.
+        # each bucket then spans at most merge._SALT_BUCKETS partitions, i.e.
         # at most that many (advisory-sized) files per batch.
         if not prepartitioned:
             out = out.repartition("__bucket")
@@ -449,13 +449,15 @@ class LakeTable:
         batch_id: str,
         stats: dict | None = None,
         stats_fn=None,
-        prepartitioned: bool = False,
     ) -> dict:
         """MERGE commit: append the batch's upserts + tombstones as new
         delta files; compact any bucket whose file count exceeds the
         threshold. Write volume: O(batch) + amortized compaction.
         ``touched_buckets=None`` derives the touched set from the files
         the write actually produced (saves a pre-pass over the batch).
+        ``delta_rows`` is written without a bucket exchange: it should
+        arrive partitioned by bucket, as apply_batch's spread exchange
+        leaves it; otherwise each task writes its own file per bucket.
 
         ``stats_fn``: optional ``callable(touched_buckets, new_files)
         -> dict`` invoked right after the delta files land and BEFORE
@@ -467,7 +469,7 @@ class LakeTable:
         seq = (prev["commit_seq"] + 1) if prev else 0
         files = {k: list(v) for k, v in (prev["files"] if prev else {}).items()}
 
-        new_files = self._write_snap(delta_rows, seq, "delta", prepartitioned=prepartitioned)
+        new_files = self._write_snap(delta_rows, seq, "delta", prepartitioned=True)
         if touched_buckets is None:
             touched_buckets = sorted(int(b) for b in new_files)
         if stats_fn is not None:

@@ -10,15 +10,13 @@ scale:
    Spark plans this as partial→final hash aggregation (map-side combine
    absorbs hot keys before the shuffle, which is the scalable answer to
    monorepo skew for aggregation).
-4. **Salted repartition + manifest UDF** — ``salt = xxhash64(commit)
-   pmod S`` spreads a hot (repo,path) key over S partitions for the
-   CPU-heavy chunking stage (AQE cannot split a hot key inside a UDF
-   stage; mandated by BASELINE.json north_rule). The default path
-   partitions by (BUCKET, salt) with AQE sizing, which both spreads
-   hot keys and already satisfies the write layout — the batch payload
-   crosses exactly ONE exchange per commit; an explicit
-   ``udf_partitions`` keeps the classic
-   ``repartition(P, repo, path, salt)`` + write-side bucket exchange.
+4. **Spread exchange + manifest UDF** — the batch is repartitioned by
+   (BUCKET, salt) with ``salt = xxhash64(commit) pmod 8`` and AQE
+   sizing, before the CPU-heavy chunking stage (AQE cannot split a hot
+   key inside a UDF stage; mandated by BASELINE.json north_rule). It
+   spreads a monorepo's keys over partitions AND already satisfies the
+   write layout, so the batch payload crosses exactly ONE exchange per
+   commit.
 5. **Merge-on-read delta commit** — the batch's upserts + tombstones
    append as new bucket-partitioned files (O(batch) write volume);
    readers resolve last-writer-wins per key and compaction keeps
@@ -72,8 +70,8 @@ def last_writer_wins(events: DataFrame, broadcast_winners: bool = True) -> DataF
     Default strategy: aggregate only ``(repo, path, max(seq))`` — a few
     bytes per key — then broadcast semi-join the events against the
     winners. The wide ``content`` column never enters a shuffle here
-    (payload bytes move exactly once per batch, in the salted
-    repartition before the chunking UDF). Requires ``seq`` unique
+    (payload bytes move exactly once per batch, in the spread
+    exchange before the chunking UDF). Requires ``seq`` unique
     within a batch, which a binlog/WAL offset is by construction.
 
     Fallback (``broadcast_winners=False``): single-shuffle
@@ -94,24 +92,23 @@ def last_writer_wins(events: DataFrame, broadcast_winners: bool = True) -> DataF
     )
 
 
-def salted_repartition(
-    df: DataFrame, partitions: int | None = None, salt_buckets: int = 8
-) -> DataFrame:
-    """Spread hot (repo, path) keys across ``salt_buckets`` partitions
-    for the chunking stage; salt is derived from ``commit`` so replays
-    place rows identically.
+#: salt values per bucket in apply_batch's spread exchange: at most
+#: this many partitions (so delta files) per bucket and batch.
+_SALT_BUCKETS = 8
 
-    ``partitions=None`` (default) omits the explicit partition count so
-    AQE sizes the exchange from the batch's actual bytes (guide §2:
-    scale-adaptive partitioning, not a constant tuned to one cluster) —
-    a small micro-batch coalesces to a handful of UDF tasks instead of
-    paying ``defaultParallelism`` Arrow round-trips, while a large batch
-    still fans out to advisory-sized partitions. Pass an explicit count
-    to pin the layout (tests, ingest-bench parallelism sweeps)."""
-    salt = F.pmod(F.xxhash64(F.coalesce(F.col("commit"), F.lit(""))), F.lit(salt_buckets))
-    if partitions is None:
-        return df.repartition(F.col("repo"), F.col("path"), salt)
-    return df.repartition(partitions, F.col("repo"), F.col("path"), salt)
+
+def _spread(winners: DataFrame, num_buckets: int) -> DataFrame:
+    """The batch's one payload exchange: partition by (lake bucket,
+    salt). The salt comes from ``commit`` so replays place rows
+    identically. A monorepo's keys spread over partitions for the
+    chunking UDF, and each bucket's rows land in at most
+    ``_SALT_BUCKETS`` partitions, so the delta write needs no exchange
+    of its own. No partition count: AQE sizes it from the batch's
+    bytes."""
+    salt = F.pmod(
+        F.xxhash64(F.coalesce(F.col("commit"), F.lit(""))), F.lit(_SALT_BUCKETS)
+    )
+    return winners.repartition(bucket_expr(num_buckets), salt)
 
 
 def apply_batch(
@@ -119,7 +116,6 @@ def apply_batch(
     raw_events: DataFrame,
     batch_id: str | int,
     params: ChunkerParams = SOURCE_PARAMS,
-    udf_partitions: int | None = None,
     collect_metrics: bool = True,
     broadcast_threshold: int = BROADCAST_THRESHOLD_ROWS,
 ) -> dict | None:
@@ -159,40 +155,20 @@ def apply_batch(
     events = normalize_events(raw_events)
     # The reduced batch: upserts with manifests + delete tombstones.
     # Deletes have null content, so the manifest UDF passes them
-    # through as null. Cached only when the metrics path needs several
-    # passes — the hot path is a single write action and caching it
-    # would serialize every row into the memory store for nothing.
+    # through as null.
     #
-    # Partitioning (guide §2.4 — one exchange, not two): the default
-    # AQE path repartitions by (BUCKET, salt) before the chunking UDF,
-    # which spreads a hot (repo, path) key over the salt values exactly
-    # like the key-level salt did AND already satisfies the write
-    # layout — _write_snap skips its own bucket repartition, so the
-    # batch payload crosses ONE exchange per commit instead of two.
-    # AQE sizes the exchange, so a micro-batch coalesces to one
-    # advisory-sized partition (one file per bucket, the former
-    # layout) while a snapshot-scale batch fans out to at most
-    # salt_buckets files per bucket, each advisory-sized. An explicit
-    # ``udf_partitions`` (ingest-bench parallelism sweeps) keeps the
-    # former two-exchange pipeline so its file layout and ladder
-    # comparability are unchanged.
+    # Partitioning: _spread is the batch's one payload exchange (guide
+    # §2.4 — one exchange, not two). AQE sizes it: a micro-batch
+    # coalesces to one advisory-sized partition (one file per bucket)
+    # while a snapshot-scale batch fans out to at most _SALT_BUCKETS
+    # files per bucket, each advisory-sized.
     # (No cache anywhere: the metrics path reads the just-written delta
     # files for its reuse join instead of pinning the batch in memory —
-    # caching would also block AQE from re-coalescing the fused
-    # exchange, InMemoryRelation partitioning is frozen, which fanned a
-    # 20-row batch into one tiny file per (bucket, salt) group when
-    # tried.)
+    # caching would also block AQE from re-coalescing the exchange,
+    # InMemoryRelation partitioning is frozen, which fanned a 20-row
+    # batch into one tiny file per (bucket, salt) group when tried.)
     winners = last_writer_wins(events, broadcast_winners=use_broadcast)
-    if udf_partitions is None:
-        salt = F.pmod(
-            F.xxhash64(F.coalesce(F.col("commit"), F.lit(""))), F.lit(8)
-        )
-        spread = winners.repartition(bucket_expr(lake.num_buckets), salt)
-        prepartitioned = True
-    else:
-        spread = salted_repartition(winners, udf_partitions)
-        prepartitioned = False
-    batch = with_manifest(spread, params=params)
+    batch = with_manifest(_spread(winners, lake.num_buckets), params=params)
     # merge-on-read delta: upserts keep their seq; deletes become
     # tombstones. No table read, no join — the MERGE "match" is
     # resolved lazily by readers (lake.resolve_state) and physically
@@ -290,17 +266,13 @@ def apply_batch(
                 stats["reused_chunks"] = 0
             return stats
 
-        commit = lake.append_delta(
-            delta, None, str(batch_id), stats_fn=_finish_stats,
-            prepartitioned=prepartitioned,
-        )
+        commit = lake.append_delta(delta, None, str(batch_id), stats_fn=_finish_stats)
     else:
         # hot path: ONE Spark action per batch — the delta write;
         # touched buckets are derived from the files it produced
         commit = lake.append_delta(
             delta, None, str(batch_id),
             stats={"lww_strategy": "broadcast" if use_broadcast else "shuffle"},
-            prepartitioned=prepartitioned,
         )
     return commit
 

@@ -15,7 +15,7 @@ JVM-side in built-in functions so Catalyst can push/prune/codegen it.
 Scale notes: the UDF is embarrassingly parallel per row; rows shorter
 than ``min_size`` take a fast path with zero hashing (the common case
 for source files at default restic params). Skewed key distributions
-are handled upstream by salted repartitioning (cdc/merge.py), not here.
+are handled upstream by the (bucket, salt) spread exchange (cdc/merge.py).
 """
 
 from __future__ import annotations
@@ -33,7 +33,7 @@ from pyspark.sql.types import (
 )
 
 from ..kernel.chunker import ChunkerParams
-from ..kernel.vectorized import chunk_buffer, chunk_many
+from ..kernel.vectorized import chunk_many
 
 #: Spark-side manifest element type. ``cut`` is always < 2^53 (degree-53
 #: modulus, rabin.d:118-127) so LongType holds it without sign issues.
@@ -46,13 +46,6 @@ CHUNK_TYPE = StructType(
     ]
 )
 MANIFEST_TYPE = ArrayType(CHUNK_TYPE, False)
-
-
-def _manifest_of(content: bytes | str | None, params: ChunkerParams) -> list | None:
-    if content is None:
-        return None
-    data = content.encode("utf-8") if isinstance(content, str) else bytes(content)
-    return _rows(data, chunk_buffer(data, params))
 
 
 def _rows(data: bytes, chunks) -> list:

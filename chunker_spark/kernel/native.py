@@ -11,8 +11,6 @@ numpy, so a missing provider changes nothing.
 Since round 5 a provider ships in-tree: ``_native.c`` is compiled at
 first use by ``native_cc.py`` with the host gcc (present in this
 sandbox) and self-checked against the scalar oracle before activation.
-``CHUNKER_NATIVE=0`` disables it (the numpy path is the comparison
-baseline for ladder benchmarks collected before the provider existed).
 
 Provider contract (duck-typed, validated by the injection test):
 
@@ -25,15 +23,13 @@ per buffer, covering it exactly, bit-for-bit equal to the scalar oracle
 oracle are the acceptance bar for any native provider too.
 
 Discovery order: an installed ``chunker_native`` module wins; else the
-bundled C provider (gcc-compiled, self-checked) unless
-``CHUNKER_NATIVE=0``; else None (numpy). ``set_provider`` injects one
+bundled C provider (gcc-compiled, self-checked); else None (numpy, the
+fallback when no compiler is present). ``set_provider`` injects one
 explicitly (tests, vendored builds); ``set_provider(None)`` forces the
 numpy path.
 """
 
 from __future__ import annotations
-
-import os
 
 _UNRESOLVED = object()
 _provider = _UNRESOLVED
@@ -48,14 +44,12 @@ def provider():
 
             _provider = chunker_native
         except ImportError:
-            _provider = None
-            if os.environ.get("CHUNKER_NATIVE", "1") != "0":
-                try:
-                    from . import native_cc
+            try:
+                from . import native_cc
 
-                    _provider = native_cc.load()
-                except Exception:
-                    _provider = None
+                _provider = native_cc.load()
+            except Exception:
+                _provider = None
     return _provider
 
 

@@ -19,10 +19,6 @@ simultaneously; each compiles to a private temp name and atomically
 are benign. On a multi-node cluster every node compiles once (the .so is
 keyed by source hash, not host) — or ship a prebuilt ``chunker_native``
 module, which ``native.provider()`` prefers.
-
-Kill-switch: ``CHUNKER_NATIVE=0`` (checked in native.py) keeps the numpy
-path — used by ladder benchmarks that must stay comparable with samples
-collected before this provider existed.
 """
 
 from __future__ import annotations

@@ -32,12 +32,6 @@ def _norm(a) -> F.Column:
     return F.sqrt(_dot(a, a))
 
 
-def cosine_similarity(a, b) -> F.Column:
-    a = F.col(a) if isinstance(a, str) else a
-    b = F.col(b) if isinstance(b, str) else b
-    return _dot(a, b) / (_norm(a) * _norm(b))
-
-
 def brute_force_topk(
     vectors: DataFrame,
     queries: DataFrame,

@@ -28,6 +28,25 @@ def test_oracle_keys_subset():
     assert set(entrymod.oracle_sql()) <= set(entrymod.queries())
 
 
+def test_import_fails_loudly_without_debugging_cache():
+    """The module switches off PySpark's DataFrame-debugging capture
+    through a private cache; a PySpark without that attribute must stop
+    the import, not silently keep the capture on."""
+    import subprocess
+
+    code = (
+        "import pyspark.errors.utils as u\n"
+        "del u._enable_debugging_cache\n"
+        "import __spark_entry__\n"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    r = subprocess.run(
+        [sys.executable, "-c", code], cwd=root, capture_output=True, text=True, timeout=120
+    )
+    assert r.returncode != 0
+    assert "_enable_debugging_cache is missing" in r.stderr
+
+
 @pytest.mark.parametrize("name", sorted(entrymod.queries()))
 def test_query_runs_and_matches_oracle(spark, name):
     fn = entrymod.queries()[name]

@@ -118,15 +118,10 @@ def test_native_batch_equals_numpy_batch():
     assert got == want
 
 
-def test_native_autodiscovered_unless_disabled(monkeypatch):
-    """provider() builds+returns the C provider by default and honors
-    the CHUNKER_NATIVE=0 kill-switch."""
+def test_native_autodiscovered(monkeypatch):
+    """provider() builds and returns the C provider by default."""
     monkeypatch.setattr(native, "_provider", native._UNRESOLVED)
     assert native.provider() is not None
-    monkeypatch.setattr(native, "_provider", native._UNRESOLVED)
-    monkeypatch.setenv("CHUNKER_NATIVE", "0")
-    assert native.provider() is None
-    monkeypatch.setattr(native, "_provider", native._UNRESOLVED)
 
 
 def test_native_throughput_floor():

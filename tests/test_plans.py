@@ -155,22 +155,26 @@ def test_minhash_band_join_is_fixed_width_and_sig_reused(spark):
     assert "ArrowEvalPython" not in plan  # signature UDF ran once, pre-plan
 
 
-def test_salted_repartition_spreads_monorepo_keys(spark):
+def test_batch_spread_spreads_monorepo_keys(spark):
     """Monorepo skew: a batch whose keys all live in one repo must still
-    spread across partitions for the chunking stage (north_rule salted
-    repartition) — no partition holds more than a small multiple of the
-    mean."""
-    from chunker_spark.cdc.merge import salted_repartition
+    spread across partitions in apply_batch's one payload exchange
+    (north_rule) — no partition holds more than a small multiple of the
+    mean. AQE is off so the exchange keeps its 16 partitions instead of
+    coalescing the small test batch."""
+    from chunker_spark.cdc.merge import _spread
 
     rows = [("repo-0", f"src/f{i}.py", f"c{i}") for i in range(2000)]
     df = spark.createDataFrame(rows, "repo string, path string, commit string")
     parts = 16
-    sizes = (
-        salted_repartition(df, parts)
-        .rdd.glom()
-        .map(len)
-        .collect()
-    )
+    keys = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+    old = {k: spark.conf.get(k) for k in keys}
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    spark.conf.set("spark.sql.shuffle.partitions", str(parts))
+    try:
+        sizes = _spread(df, num_buckets=16).rdd.glom().map(len).collect()
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)
     assert len(sizes) == parts
     nonempty = [s for s in sizes if s]
     assert len(nonempty) >= parts // 2  # most partitions carry work
