@@ -128,6 +128,12 @@ class LakeTable:
         10⁶-batch regime would otherwise rewrite a multi-MB ledger into
         every commit. Spilled chunks are immutable, so they are read
         once per process and cached."""
+        if "://" in root:
+            # the commit log publishes through os.listdir / open /
+            # os.rename: a URI would silently become a local directory
+            raise ValueError(
+                f"LakeTable root must be a POSIX path (e.g. a mounted volume), got {root!r}"
+            )
         self.spark = spark
         self.root = root.rstrip("/")
         self.num_buckets = num_buckets
@@ -144,7 +150,7 @@ class LakeTable:
         # across two incompatible hashings. rebucket() is the only way
         # to change it.
         committed = self.current_commit()
-        if committed and "num_buckets" in committed:
+        if committed:
             self.num_buckets = int(committed["num_buckets"])
 
     # ---- commit log ------------------------------------------------
@@ -188,20 +194,13 @@ class LakeTable:
         plus references to immutable spilled chunks (``ledger_files``,
         cached per process), so the per-batch idempotency check is O(1)
         file reads instead of re-reading every commit JSON (O(n) per
-        batch → O(n²) over a stream). Falls back to the full scan for
-        pre-ledger commit logs."""
+        batch → O(n²) over a stream)."""
         commit = self.current_commit()
         if not commit:
             return set()
-        if "batch_ids" in commit:
-            ids = set(commit["batch_ids"])
-            for name in commit.get("ledger_files", []):
-                ids |= self._ledger_chunk(name)
-            return ids
-        ids = set()
-        for name in self._commit_files():
-            with open(f"{self.root}/meta/{name}") as f:
-                ids.add(str(json.load(f)["batch_id"]))
+        ids = set(commit["batch_ids"])
+        for name in commit["ledger_files"]:
+            ids |= self._ledger_chunk(name)
         return ids
 
     def _write_commit(self, commit: dict) -> None:
@@ -234,18 +233,18 @@ class LakeTable:
         ``at`` selects a historical commit (time travel). ``key`` is a
         (repo, path) point-lookup hint: files whose composite
         first/last-row key range excludes the key are skipped entirely
-        (data skipping on the key-sorted files; files without recorded
-        ranges are always read)."""
+        (data skipping on the key-sorted files; a file whose footer
+        could not be read has a null range and is always read)."""
         commit = self.commit_at(at) if at is not None else self.current_commit()
         paths = self._files_for(commit, buckets)
         if key is not None and commit:
-            fstats = commit.get("file_stats", {})
+            fstats = commit["file_stats"]
             key_t = (key[0], key[1])
 
             def may_contain(p: str) -> bool:
-                s = fstats.get(p)
-                if not s or any(v is None for v in s):
-                    return True  # no stats -> can't prune
+                s = fstats[p]
+                if any(v is None for v in s):
+                    return True  # unreadable footer -> can't prune
                 return (s[0], s[1]) <= key_t <= (s[2], s[3])
 
             paths = [p for p in paths if may_contain(p)]
@@ -415,20 +414,38 @@ class LakeTable:
                 )
         return files
 
-    def _ledger_carry(
-        self, prev: dict | None, batch_id: str | int, seq: int
-    ) -> tuple[list[str], list[str]]:
-        """Carry the exactly-once batch-id ledger into the next commit:
-        extend the recent tail with ``batch_id`` and spill it to an
-        immutable side chunk once it exceeds ``ledger_spill_threshold``
-        (a crash between the chunk write and the commit rename is
-        harmless — a retry rewrites the same deterministic content via
-        tmp + rename). Returns (tail, ledger_files)."""
-        prev_tail = set(prev.get("batch_ids", [])) if prev else set()
-        ledger_files = list(prev.get("ledger_files", [])) if prev else []
-        if prev and "batch_ids" not in prev:  # pre-ledger log: rebuild once
-            prev_tail = self.committed_batch_ids()
-        tail = sorted(prev_tail | {str(batch_id)})
+    def _next_commit(
+        self,
+        prev: dict | None,
+        seq: int,
+        batch_id: str,
+        kind: str,
+        files: dict[str, list[str]],
+        touched: list[int],
+        compacted: list[int],
+        stats: dict,
+    ) -> dict:
+        """Build commit ``seq`` on top of ``prev`` — the one place a
+        commit dict is made; ``_write_commit`` publishes it.
+
+        File stats: every live file keeps the composite key range
+        ``prev`` recorded for it; files this commit wrote get theirs
+        from their parquet footers (driver-side, O(new files)) —
+        _write_snap key-sorts every file, which is what makes
+        first/last-row a valid bound.
+
+        Ledger: the exactly-once batch-id tail is extended with
+        ``batch_id`` and spilled to an immutable side chunk once it
+        exceeds ``ledger_spill_threshold`` (a crash between the chunk
+        write and the commit rename is harmless — a retry rewrites the
+        same deterministic content via tmp + rename)."""
+        prev_stats = prev["file_stats"] if prev else {}
+        live = {p for fl in files.values() for p in fl}
+        file_stats = {p: s for p, s in prev_stats.items() if p in live}
+        file_stats.update(_file_key_ranges(sorted(live - set(prev_stats))))
+
+        tail = sorted(set(prev["batch_ids"] if prev else []) | {str(batch_id)})
+        ledger_files = list(prev["ledger_files"]) if prev else []
         if len(tail) > self.ledger_spill_threshold:
             chunk_name = f"ledger-{seq:012d}.json"
             tmp = f"{self.root}/meta/.tmp-ledger-{uuid.uuid4().hex}.json"
@@ -440,21 +457,26 @@ class LakeTable:
             self._ledger_cache[chunk_name] = frozenset(tail)
             ledger_files.append(chunk_name)
             tail = []
-        return tail, ledger_files
+        return {
+            "commit_seq": seq,
+            "batch_id": str(batch_id),
+            "batch_ids": tail,  # recent ids; spilled chunks hold the rest
+            "ledger_files": ledger_files,
+            "ts": time.time(),
+            "kind": kind,
+            "num_buckets": self.num_buckets,
+            "touched_buckets": touched,
+            "compacted_buckets": sorted(compacted),
+            "files": files,
+            "file_stats": file_stats,
+            "stats": stats,
+        }
 
-    def append_delta(
-        self,
-        delta_rows: DataFrame,
-        touched_buckets: list[int] | None,
-        batch_id: str,
-        stats: dict | None = None,
-        stats_fn=None,
-    ) -> dict:
+    def append_delta(self, delta_rows: DataFrame, batch_id: str, stats_fn=None) -> dict:
         """MERGE commit: append the batch's upserts + tombstones as new
         delta files; compact any bucket whose file count exceeds the
         threshold. Write volume: O(batch) + amortized compaction.
-        ``touched_buckets=None`` derives the touched set from the files
-        the write actually produced (saves a pre-pass over the batch).
+        The touched buckets are the ones the write produced files for.
         ``delta_rows`` is written without a bucket exchange: it should
         arrive partitioned by bucket, as apply_batch's spread exchange
         leaves it; otherwise each task writes its own file per bucket.
@@ -464,19 +486,16 @@ class LakeTable:
         the commit JSON is renamed into place — so an Observation attached to
         ``delta_rows`` has resolved, and ``current_commit()`` still
         names the PRIOR state (lineage joins against old state read
-        consistently). Its result is merged over ``stats``."""
+        consistently). Its result is the commit's ``stats``."""
         prev = self.current_commit()
         seq = (prev["commit_seq"] + 1) if prev else 0
         files = {k: list(v) for k, v in (prev["files"] if prev else {}).items()}
 
         new_files = self._write_snap(delta_rows, seq, "delta", prepartitioned=True)
-        if touched_buckets is None:
-            touched_buckets = sorted(int(b) for b in new_files)
-        if stats_fn is not None:
-            stats = {**(stats or {}), **stats_fn(list(touched_buckets), new_files)}
+        touched = sorted(int(b) for b in new_files)
+        stats = stats_fn(touched, new_files) if stats_fn is not None else {}
         for b, fl in new_files.items():
-            files.setdefault(b, [])
-            files[b].extend(fl)
+            files.setdefault(b, []).extend(fl)
 
         # bounded read amplification: compact oversized buckets
         over = [int(b) for b, fl in files.items() if len(fl) > self.compact_threshold]
@@ -498,41 +517,8 @@ class LakeTable:
             for b in over:
                 files[str(b)] = compacted.get(str(b), [])
 
-        # per-file (repo, path) footer ranges for read-time data
-        # skipping: ranges are computed ONLY for files this commit wrote
-        # (parquet footers, driver-side, O(new files)) — _write_snap
-        # key-sorts them, which is what makes first/last-row a valid
-        # bound. Pre-existing files without stats (written by an older
-        # engine version, sortedness unknown) are pinned to Nones so
-        # the point-lookup pruner never skips them; surviving files
-        # keep their previously recorded ranges.
-        prev_stats = dict(prev.get("file_stats", {})) if prev else {}
-        live_paths = {p for fl in files.values() for p in fl}
-        written_now = {p for fl in new_files.values() for p in fl}
-        if over:
-            written_now.update(p for b in over for p in files[str(b)])
-        file_stats = {p: s for p, s in prev_stats.items() if p in live_paths}
-        file_stats.update(
-            _file_key_ranges(sorted((written_now & live_paths) - set(prev_stats)))
-        )
-        for p in live_paths - set(file_stats):  # legacy stat-less: never prune
-            file_stats[p] = [None, None, None, None]
-
-        tail, ledger_files = self._ledger_carry(prev, batch_id, seq)
-        commit = {
-            "commit_seq": seq,
-            "batch_id": str(batch_id),
-            "batch_ids": tail,  # recent ids; spilled chunks hold the rest
-            "ledger_files": ledger_files,
-            "ts": time.time(),
-            "kind": "delta" + ("+compact" if over else ""),
-            "num_buckets": self.num_buckets,
-            "touched_buckets": sorted(int(b) for b in touched_buckets),
-            "compacted_buckets": sorted(over),
-            "files": files,
-            "file_stats": file_stats,
-            "stats": stats or {},
-        }
+        kind = "delta" + ("+compact" if over else "")
+        commit = self._next_commit(prev, seq, batch_id, kind, files, touched, over, stats)
         self._write_commit(commit)
         return commit
 
@@ -581,25 +567,12 @@ class LakeTable:
         # corruption, mis-pruned bucket reads)
         try:
             files = self._write_snap(rows, seq, "rebucket")
-            file_stats: dict[str, list[str | None]] = _file_key_ranges(
-                sorted(p for fl in files.values() for p in fl)
+            commit = self._next_commit(
+                prev, seq, f"__rebucket-{seq}", "rebucket", files,
+                touched=sorted(int(b) for b in files),
+                compacted=[],
+                stats={"rebucket_from": old_n, "rebucket_to": new_num_buckets},
             )
-            batch_id = f"__rebucket-{seq}"
-            tail, ledger_files = self._ledger_carry(prev, batch_id, seq)
-            commit = {
-                "commit_seq": seq,
-                "batch_id": batch_id,
-                "batch_ids": tail,
-                "ledger_files": ledger_files,
-                "ts": time.time(),
-                "kind": "rebucket",
-                "num_buckets": new_num_buckets,
-                "touched_buckets": sorted(int(b) for b in files),
-                "compacted_buckets": [],
-                "files": files,
-                "file_stats": file_stats,
-                "stats": {"rebucket_from": old_n, "rebucket_to": new_num_buckets},
-            }
             self._write_commit(commit)
         except BaseException:
             # BaseException, not Exception: a KeyboardInterrupt/SystemExit
@@ -609,6 +582,15 @@ class LakeTable:
             self.num_buckets = old_n  # nothing committed: layout unchanged
             raise
         return commit
+
+    def _referenced_files(self, names: list[str]) -> set[str]:
+        """Every data file the named commit JSONs reference."""
+        referenced: set[str] = set()
+        for name in names:
+            with open(f"{self.root}/meta/{name}") as f:
+                for fl in json.load(f)["files"].values():
+                    referenced.update(fl)
+        return referenced
 
     def expire_commits(self, keep_last: int = 2) -> dict:
         """Expire old commits and garbage-collect their data files
@@ -625,11 +607,7 @@ class LakeTable:
         if len(names) <= keep_last:
             return {"removed_commits": 0, "removed_files": 0, "kept_commits": len(names)}
         keep, drop = names[-keep_last:], names[:-keep_last]
-        referenced: set[str] = set()
-        for name in keep:
-            with open(f"{self.root}/meta/{name}") as f:
-                for fl in json.load(f)["files"].values():
-                    referenced.update(fl)
+        referenced = self._referenced_files(keep)
         removed_files = 0
         data_root = f"{self.root}/data"
         for dirpath, _dirnames, filenames in os.walk(data_root, topdown=False):
@@ -658,11 +636,9 @@ class LakeTable:
         not-yet-committed snap dir would look orphaned."""
         import shutil
 
-        referenced_dirs: set[str] = set()
-        for name in self._commit_files():
-            with open(f"{self.root}/meta/{name}") as f:
-                for fl in json.load(f)["files"].values():
-                    referenced_dirs.update(os.path.dirname(p) for p in fl)
+        referenced_dirs = {
+            os.path.dirname(p) for p in self._referenced_files(self._commit_files())
+        }
         data_root = f"{self.root}/data"
         removed = []
         if os.path.isdir(data_root):

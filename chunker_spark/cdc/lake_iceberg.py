@@ -1,4 +1,4 @@
-"""Iceberg-backed sink: the drop-in replacement for the built-in lake.
+"""Iceberg-backed sink: the MERGE half of the built-in lake's contract.
 
 SURVEY.md §7.3.3 keeps the table format behind a small interface so the
 engine can target real Apache Iceberg when its runtime jar is on the
@@ -32,8 +32,15 @@ Tombstone retention matches lake.py (kept through compaction); an
 Iceberg deployment would age them out with a DELETE WHERE older than
 the maximum source re-delivery horizon.
 
-Interface parity with ``lake.LakeTable``:
-    committed_batch_ids() / read() / append_delta(delta, touched, id)
+Interface shared with ``lake.LakeTable``:
+    committed_batch_ids() / read() / append_delta(delta, batch_id, stats_fn)
+
+That is the whole shared surface. ``merge.apply_batch`` (and so
+``IngestStream``) also reads the built-in lake's bucket layout —
+``num_buckets``, ``current_commit``, ``read_files``, ``_files_for`` —
+which this class does not have, so it cannot stand in for a
+``LakeTable`` there: callers pass it already-reduced delta rows
+(TABLE_SCHEMA + ``seq`` + ``deleted``) directly.
 """
 
 from __future__ import annotations
@@ -73,7 +80,8 @@ def ledger_insert_sql(ledger: str) -> str:
 
 
 class IcebergLakeTable:
-    """Same sink contract as lake.LakeTable, on an Iceberg catalog table."""
+    """The append/read/ledger subset of lake.LakeTable's contract, on an
+    Iceberg catalog table (see the module docstring for what it lacks)."""
 
     def __init__(self, spark: SparkSession, table: str) -> None:
         if not iceberg_available(spark):
@@ -95,7 +103,7 @@ class IcebergLakeTable:
     def read(self) -> DataFrame:
         return self.spark.read.table(self.table).where("NOT deleted")
 
-    def append_delta(self, delta_rows: DataFrame, touched, batch_id: str, stats=None) -> dict:
+    def append_delta(self, delta_rows: DataFrame, batch_id: str, stats_fn=None) -> dict:
         """Seq-fenced MERGE INTO keyed on (repo, path). Idempotent:
         equal or lower seqs never match, tombstones persist as flagged
         rows, so replaying this batch (crash between the MERGE and the
@@ -106,11 +114,16 @@ class IcebergLakeTable:
         batch spanning several changes to one key would otherwise only
         be safe when driven through apply_batch's LWW — making the
         precondition explicit here keeps the seam safe when called
-        directly."""
+        directly.
+
+        ``stats_fn`` is called as in ``LakeTable.append_delta`` after
+        the MERGE, with no touched buckets and no new files: Iceberg
+        owns its file layout."""
         from .merge import last_writer_wins
 
         reduced = last_writer_wins(delta_rows, broadcast_winners=False)
         reduced.createOrReplaceTempView("__cdc_delta")
         self.spark.sql(merge_into_sql(self.table))
         self.spark.sql(ledger_insert_sql(self.ledger), args={"batch_id": str(batch_id)})
-        return {"batch_id": str(batch_id), "table": self.table, "stats": stats or {}}
+        stats = stats_fn([], {}) if stats_fn is not None else {}
+        return {"batch_id": str(batch_id), "table": self.table, "stats": stats}

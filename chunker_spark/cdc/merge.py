@@ -152,6 +152,7 @@ def apply_batch(
                 normalize_events(raw_events).select(*KEY_COLS).distinct().count()
             )
             use_broadcast = n_keys <= broadcast_threshold
+    lww = "broadcast" if use_broadcast else "shuffle"  # recorded in the commit stats
     events = normalize_events(raw_events)
     # The reduced batch: upserts with manifests + delete tombstones.
     # Deletes have null content, so the manifest UDF passes them
@@ -224,7 +225,7 @@ def apply_batch(
                 "upsert_chunks": vals["up_chunks"],
                 "delete_rows": vals["n"] - vals["up_rows"],
                 "keys_per_bucket": {str(b): n for b, n in sorted(per_bucket.items())},
-                "lww_strategy": "broadcast" if use_broadcast else "shuffle",
+                "lww_strategy": lww,
             }
             # chunk-reuse lineage compares only against prior
             # versions of THIS batch's keys, so prune the old-state
@@ -266,13 +267,12 @@ def apply_batch(
                 stats["reused_chunks"] = 0
             return stats
 
-        commit = lake.append_delta(delta, None, str(batch_id), stats_fn=_finish_stats)
+        commit = lake.append_delta(delta, str(batch_id), stats_fn=_finish_stats)
     else:
         # hot path: ONE Spark action per batch — the delta write;
         # touched buckets are derived from the files it produced
         commit = lake.append_delta(
-            delta, None, str(batch_id),
-            stats={"lww_strategy": "broadcast" if use_broadcast else "shuffle"},
+            delta, str(batch_id), stats_fn=lambda _touched, _files: {"lww_strategy": lww}
         )
     return commit
 

@@ -27,73 +27,47 @@ from .merge import apply_batch
 def _append_metrics(lake: LakeTable, commit: dict, batch_id: int) -> None:
     """Append one (batch, bucket) lineage row set under <lake>/metrics.
 
-    Written DRIVER-SIDE with pyarrow when the lake root is a local
-    path: the payload is <= num_buckets tiny rows, and a distributed
-    write job for it costs a full job-launch round trip per batch
-    (measured 0.6-5 s on this host depending on regime — it was ~40%
-    of q_cdc_lineage, VERDICT r4 "What's wrong" #1). Non-local roots
-    (s3://, hdfs://) fall back to the Spark writer, which is also the
-    right choice there (committer semantics, credentials)."""
-    spark = lake.spark
-    stats = commit.get("stats", {})
-    per_bucket = stats.get("keys_per_bucket", {}) or {"-1": 0}
-    rows = [
-        (
-            int(commit["commit_seq"]),
-            str(batch_id),
-            int(b),
-            int(n),
-            int(stats.get("upsert_rows", 0)),
-            int(stats.get("upsert_bytes", 0)),
-            int(stats.get("upsert_chunks", 0)),
-            int(stats.get("reused_chunks", 0)),
-            int(stats.get("delete_rows", 0)),
-        )
-        for b, n in per_bucket.items()
-    ]
-    names = [
-        "commit_seq", "batch_id", "bucket", "bucket_keys",
-        "upsert_rows", "upsert_bytes", "upsert_chunks",
-        "reused_chunks", "delete_rows",
-    ]
-    root = str(lake.root)
-    scheme = root.split("://", 1)[0] if "://" in root else ""
-    if scheme in ("", "file"):
-        import pyarrow as pa
-        import pyarrow.parquet as pq
+    Written DRIVER-SIDE with pyarrow: the payload is <= num_buckets
+    tiny rows, and a distributed write job for it costs a full
+    job-launch round trip per batch (measured 0.6-5 s on a 32-core VM
+    depending on regime — it was ~40% of q_cdc_lineage, VERDICT r4
+    "What's wrong" #1)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
-        path = root.split("://", 1)[-1]
-        os.makedirs(f"{path}/metrics", exist_ok=True)
-        table = pa.table(
-            {n: list(col) for n, col in zip(names, zip(*rows))},
-            schema=pa.schema(
-                [
-                    ("commit_seq", pa.int64()),
-                    ("batch_id", pa.string()),
-                    ("bucket", pa.int32()),
-                    ("bucket_keys", pa.int32()),
-                    ("upsert_rows", pa.int64()),
-                    ("upsert_bytes", pa.int64()),
-                    ("upsert_chunks", pa.int64()),
-                    ("reused_chunks", pa.int64()),
-                    ("delete_rows", pa.int64()),
-                ]
-            ),
-        )
-        # commit_seq is unique per commit; tmp+rename keeps concurrent
-        # readers from seeing a half-written file
-        final = f"{path}/metrics/part-{int(commit['commit_seq']):08d}.parquet"
-        tmp = f"{final}.{os.getpid()}.tmp"
-        pq.write_table(table, tmp)
-        os.replace(tmp, final)
-        return
-    df = spark.createDataFrame(
-        rows,
-        "commit_seq long, batch_id string, bucket int, bucket_keys int, "
-        "upsert_rows long, upsert_bytes long, upsert_chunks long, "
-        "reused_chunks long, delete_rows long",
+    schema = pa.schema(
+        [
+            ("commit_seq", pa.int64()),
+            ("batch_id", pa.string()),
+            ("bucket", pa.int32()),
+            ("bucket_keys", pa.int32()),
+            # the commit's batch-wide counts, named as in its stats
+            ("upsert_rows", pa.int64()),
+            ("upsert_bytes", pa.int64()),
+            ("upsert_chunks", pa.int64()),
+            ("reused_chunks", pa.int64()),
+            ("delete_rows", pa.int64()),
+        ]
     )
-    df.coalesce(1).write.mode("append").parquet(f"{lake.root}/metrics")
+    stats = commit.get("stats", {})
+    counts = {n: int(stats.get(n, 0)) for n in schema.names[4:]}
+    per_bucket = stats.get("keys_per_bucket", {}) or {"-1": 0}
+    seq = int(commit["commit_seq"])
+    table = pa.Table.from_pylist(
+        [
+            {"commit_seq": seq, "batch_id": str(batch_id), "bucket": int(b),
+             "bucket_keys": int(n), **counts}
+            for b, n in per_bucket.items()
+        ],
+        schema=schema,
+    )
+    os.makedirs(f"{lake.root}/metrics", exist_ok=True)
+    # commit_seq is unique per commit; tmp+rename keeps concurrent
+    # readers from seeing a half-written file
+    final = f"{lake.root}/metrics/part-{seq:08d}.parquet"
+    tmp = f"{final}.{os.getpid()}.tmp"
+    pq.write_table(table, tmp)
+    os.replace(tmp, final)
 
 
 class IngestStream:

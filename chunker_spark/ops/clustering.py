@@ -62,7 +62,13 @@ def _dist_structs_sql(vec_col: str, centroids: list[tuple[int, list[float]]]) ->
     assignment stage is planned, which ``kmeans_fit`` pays once per
     Lloyd iteration and every query build pays once. Catalyst
     constant-folds the cast literals, so the generated code is the
-    same literal-centroid codegen as before."""
+    same literal-centroid codegen as before.
+
+    ``vec_col`` must be a plain identifier: it is backtick-quoted into
+    the SQL text, where a dotted name would silently mean a different
+    (top-level) column than ``F.col`` resolves."""
+    if not vec_col.isidentifier():
+        raise ValueError(f"vec_col must be a plain column identifier, got {vec_col!r}")
     v_sql = f"CAST(`{vec_col}` AS ARRAY<DOUBLE>)"
     parts = []
     for cid, vec in centroids:

@@ -46,6 +46,11 @@ def tfidf_top_terms(
 
     Returns (group_col, rank, term, total_tf, doc_freq, score) with
     score = total_tf * ln((N_docs+1)/(doc_freq+1)), rounded to 4.
+
+    Precondition: each document (``id_col`` value) belongs to exactly
+    one group. ``doc_freq`` is the sum of per-group distinct-document
+    counts, so a document that appears under two groups is counted
+    twice and its terms' scores come out too low.
     """
     if k <= 0:
         raise ValueError(f"k must be positive, got {k}")

@@ -378,36 +378,14 @@ def test_ledger_scale_100k_batches(spark, tmp_path):
     assert apply_batch(big, _events_df(spark, events[:10]), "H054321", params=PARAMS) is None
 
 
-def test_lookup_never_prunes_legacy_statless_files(spark, tmp_path):
-    """Upgrade safety (ADVICE): files inherited from a commit log with
-    no file_stats may have been written UNSORTED by an older engine, so
-    their first/last rows are not valid key bounds. append_delta must
-    pin them to null ranges (never pruned) rather than backfilling
-    ranges from footers — a backfilled bogus range made lookup()
-    silently return empty for keys the file actually contains."""
-    import json as _json
-
-    events = list(gen_events_local(SPEC, 80))
-    lake = LakeTable(spark, str(tmp_path / "lake"), num_buckets=2)
-    apply_batch(lake, _events_df(spark, events[:40]), "old", params=PARAMS)
-    # simulate the pre-stats engine: strip file_stats from the commit
-    commit = lake.current_commit()
-    legacy_files = {p for fl in commit["files"].values() for p in fl}
-    commit.pop("file_stats", None)
-    commit["commit_seq"] += 1
-    lake._write_commit(commit)
-
-    upgraded = LakeTable(spark, str(tmp_path / "lake"), num_buckets=2)
-    apply_batch(upgraded, _events_df(spark, events[40:80]), "new", params=PARAMS)
-    stats = upgraded.current_commit()["file_stats"]
-    for p in legacy_files:
-        assert stats[p] == [None, None, None, None]  # unprunable
-    # every key present only in the legacy files must still be found
-    state = upgraded.read().collect()
-    assert len(state) > 0
-    probe = state[0]
-    got = upgraded.lookup(probe.repo, probe.path).collect()
-    assert len(got) == 1 and got[0].content_sha256 == probe.content_sha256
+def test_lake_rejects_uri_root(spark, tmp_path, monkeypatch):
+    """The commit log publishes through os.listdir / open / os.rename,
+    so a URI root fails at construction instead of silently becoming a
+    local ``s3:/...`` directory that breaks at the first commit."""
+    monkeypatch.chdir(tmp_path)
+    with pytest.raises(ValueError, match="POSIX path"):
+        LakeTable(spark, "s3://b/lake")
+    assert not (tmp_path / "s3:").exists()
 
 
 def test_time_travel_read(spark, tmp_path):
@@ -542,31 +520,54 @@ def test_tombstone_horizon_ages_out_dead_deletes(spark, tmp_path):
     assert tombs2.where(F.col("seq") < horizon).count() == 10  # all early deletes kept
 
 
-def test_point_lookup_prunes_files_by_footer_stats(spark, tmp_path):
+#: the JSON keys of every commit kind — readers outside the engine
+#: (e.g. perfbench's commit poller) depend on them
+_COMMIT_KEYS = {
+    "commit_seq", "batch_id", "batch_ids", "ledger_files", "ts", "kind",
+    "num_buckets", "touched_buckets", "compacted_buckets", "files",
+    "file_stats", "stats",
+}
+
+
+@pytest.mark.parametrize("kind", ["delta", "delta+compact", "rebucket"])
+def test_point_lookup_prunes_files_by_footer_stats(spark, tmp_path, kind):
     """lookup(repo, path) opens only files whose footer (repo, path)
     range can contain the key — and returns exactly what a full-scan
-    filter returns."""
+    filter returns — whether the latest commit is a plain delta, a
+    compacting delta or a rebucket. Every commit kind records a non-null
+    range for every live file and writes the same JSON keys to
+    ``meta/commit-<seq>.json``."""
+    import os
+
     events = list(gen_events_local(SPEC, 300))
-    lake = LakeTable(spark, str(tmp_path / "lake"), num_buckets=4)
+    lake = LakeTable(
+        spark, str(tmp_path / "lake"), num_buckets=4,
+        compact_threshold=1 if kind == "delta+compact" else 8,
+    )
     apply_batch(lake, _events_df(spark, events[:150]), "p0", params=PARAMS)
     apply_batch(lake, _events_df(spark, events[150:300]), "p1", params=PARAMS)
+    if kind == "rebucket":
+        lake.rebucket(8)
 
     commit = lake.current_commit()
-    assert commit["file_stats"], "composite key ranges must be recorded"
+    assert commit["kind"] == kind
+    assert set(commit) == _COMMIT_KEYS
+    assert os.path.exists(f"{lake.root}/meta/commit-{commit['commit_seq']:012d}.json")
     all_paths = [p for fl in commit["files"].values() for p in fl]
-    # every live file has usable stats (files are written key-sorted)
-    assert all(
-        all(v is not None for v in commit["file_stats"][p]) for p in all_paths
-    )
+    # every live file has a usable range (files are written key-sorted)
+    for p in all_paths:
+        rng = commit["file_stats"][p]
+        assert len(rng) == 4 and all(v is not None for v in rng), p
     # the ordering contract the ranges depend on: rows within each data
     # file ARE sorted by (repo, path) — partitionBy must not clobber the
     # clustering sort (it inserts its own unstable __bucket sort unless
     # __bucket already leads the ordering)
     import pyarrow.parquet as pq
 
-    t = pq.ParquetFile(all_paths[0]).read(columns=["repo", "path"])
-    keys = list(zip(t.column("repo").to_pylist(), t.column("path").to_pylist()))
-    assert keys == sorted(keys)
+    for p in all_paths:
+        t = pq.ParquetFile(p).read(columns=["repo", "path"])
+        keys = list(zip(t.column("repo").to_pylist(), t.column("path").to_pylist()))
+        assert keys == sorted(keys), p
 
     full = lake.read()
     target = full.select("repo", "path").orderBy("repo", "path").first()

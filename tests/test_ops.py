@@ -82,6 +82,18 @@ def test_simhash_known_answers(spark):
     assert got == [1598830507121166448, 4828021670264516882, 0]
 
 
+def test_simhash_struct_field_name(spark):
+    """A dotted name is a nested field, as in F.col: ``s.text`` hashes
+    exactly like the same text in a top-level ``text`` column."""
+    df = spark.createDataFrame(
+        [("The quick brown fox",), ("hello world",), ("",)], "text string"
+    ).select("text", F.struct("text").alias("s"))
+    rows = df.select(
+        simhash_expr("text").alias("top"), simhash_expr("s.text").alias("nested")
+    ).collect()
+    assert [r["nested"] for r in rows] == [r["top"] for r in rows]
+
+
 def test_brute_force_topk_self_nearest(spark):
     import numpy as np
 
@@ -224,6 +236,17 @@ def test_iceberg_seam_guarded(spark):
         _pytest.skip("iceberg present: seam active")
     with _pytest.raises(RuntimeError, match="merge-on-read"):
         IcebergLakeTable(spark, "lake.files")
+
+
+def test_iceberg_append_delta_matches_lake_signature():
+    """Callers hold either sink through the same append_delta call."""
+    import inspect
+
+    from chunker_spark.cdc.lake import LakeTable
+    from chunker_spark.cdc.lake_iceberg import IcebergLakeTable
+
+    params = lambda cls: list(inspect.signature(cls.append_delta).parameters)
+    assert params(IcebergLakeTable) == params(LakeTable)
 
 
 def test_iceberg_sql_contract_pinned():

@@ -162,6 +162,16 @@ def test_kmeans_assign_argmin_and_tiebreak(spark):
         kmeans_assign(df, [])
 
 
+def test_kmeans_assign_rejects_non_identifier_vec_col(spark):
+    """The SQL fast path backtick-quotes ``vec_col``, so a dotted name
+    would stop meaning a nested field: it is refused, not misread."""
+    df = spark.createDataFrame(
+        [(0, [1.0, 0.0])], "vec_id long, embedding array<double>"
+    ).select("vec_id", F.struct("embedding").alias("s"))
+    with pytest.raises(ValueError, match="identifier"):
+        kmeans_assign(df, [(0, [1.0, 0.0])], vec_col="s.embedding")
+
+
 def _numpy_lloyd(x, k, iters):
     cents = x[:k].copy()  # ids 0..k-1 are the k smallest -> same init
     for _ in range(iters):
