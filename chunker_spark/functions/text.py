@@ -13,6 +13,15 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import Column, functions as F
 
+
+def _bind(value: Column, body) -> Column:
+    """``body(v)`` with ``v`` bound to ``value``, evaluated once per row.
+    Higher-order functions are ``CodegenFallback``, so common
+    subexpression elimination skips their lambda bodies: an outer
+    expression written inside one is evaluated again on every call."""
+    return F.element_at(F.transform(F.array(value), body), 1)
+
+
 # ---- token counting -------------------------------------------------
 
 #: BPE-ish pre-tokenizer: word pieces, numbers, or single non-space
@@ -133,16 +142,12 @@ def dup_ngram_fraction(col: str | Column, n: int = 2) -> Column:
     occurrence: 1 − distinct/total over order-sensitive word n-grams
     (Gopher's duplicate-n-gram family; the line filter is blind to
     single-line boilerplate, this isn't). 0.0 when fewer than n words."""
-    from ..ops.decontaminate import word_ngrams
+    from ..ops.decontaminate import _words, word_ngrams
 
-    c = F.col(col) if isinstance(col, str) else col
-    words = F.filter(F.split(F.lower(c), r"\W+"), lambda x: x != "")
-    grams = word_ngrams(words, n)
-    total = F.size(grams)
-    return F.when(
-        total > 0,
-        F.round(F.lit(1.0) - F.size(F.array_distinct(grams)) / total, 6),
-    ).otherwise(F.lit(0.0)).cast("double")
+    return _bind(word_ngrams(_words(col), n), lambda grams: F.when(
+        F.size(grams) > 0,
+        F.round(F.lit(1.0) - F.size(F.array_distinct(grams)) / F.size(grams), 6),
+    ).otherwise(F.lit(0.0)).cast("double"))
 
 
 # ---- PII scrubbing (pre-training redaction) -------------------------

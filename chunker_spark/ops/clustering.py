@@ -34,17 +34,6 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
 
-def _sq_dist(vec_col: F.Column, centroid: list[float]) -> F.Column:
-    """Squared L2 distance to a literal centroid, as a sequential
-    left-to-right fold (parity with DuckDB's list_sum order)."""
-    c = F.array(*[F.lit(float(x)) for x in centroid])
-    return F.aggregate(
-        F.zip_with(vec_col, c, lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
 def _double_sql(x: float) -> str:
     """A double literal as SQL text, exact: Python's repr is the
     shortest round-trip decimal form and Spark's string->double cast is
@@ -54,15 +43,15 @@ def _double_sql(x: float) -> str:
 
 def _dist_structs_sql(vec_col: str, centroids: list[tuple[int, list[float]]]) -> str:
     """The k-way (distance, centroid-id) struct array as ONE SQL
-    expression string. Semantically identical to the Column-by-Column
-    construction (same fold order, same round-before-argmin, same
-    tie-break on cid via struct comparison) — but built with a single
-    py4j call instead of ~k*(dim+10): with k=8 d=64 the per-element
-    ``F.lit`` path costs ~500 driver round trips (~0.4 s) EVERY time an
-    assignment stage is planned, which ``kmeans_fit`` pays once per
-    Lloyd iteration and every query build pays once. Catalyst
-    constant-folds the cast literals, so the generated code is the
-    same literal-centroid codegen as before.
+    expression string: per centroid, the squared L2 distance as a
+    sequential left-to-right fold (parity with DuckDB's list_sum
+    order), rounded to 6 before the argmin, ties broken on cid by
+    struct comparison. Built with a single py4j call instead of
+    ~k*(dim+10): with k=8 d=64 a per-element ``F.lit`` construction
+    costs ~500 driver round trips (~0.4 s) EVERY time an assignment
+    stage is planned, which ``kmeans_fit`` pays once per Lloyd
+    iteration and every query build pays once. Catalyst constant-folds
+    the cast literals into literal-centroid codegen.
 
     ``vec_col`` must be a plain identifier: it is backtick-quoted into
     the SQL text, where a dotted name would silently mean a different

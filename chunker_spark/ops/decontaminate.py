@@ -12,9 +12,9 @@ strings and is BROADCAST — the corpus side's exploded grams join
 map-side (no shuffle of doc grams at all); the only shuffle carries
 fixed-width (doc_id, count) partial aggregates. Tokenization and gram
 assembly are pure JVM higher-order functions (split → filter → slice →
-array_join) over a materialized word array — no Python, no O(words²)
-re-evaluation (the split runs once per row via an explicit column, not
-inside the lambda).
+array_join) — no Python, no O(words²) re-evaluation (``word_ngrams``
+binds its word array to a lambda variable, so the split runs once per
+row, not once per gram position).
 
 Contamination is measured over DISTINCT doc grams so in-document
 repetition can't inflate the score: ``contamination = |distinct grams
@@ -26,25 +26,27 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from ..functions.text import _bind
+
 
 def word_ngrams(words_col, n: int) -> Column:
-    """Order-sensitive word n-grams (space-joined strings) from a
-    MATERIALIZED array<string> column. Empty array when the document
-    has fewer than ``n`` words (guards sequence()'s descending-range
-    behavior on start > stop)."""
+    """Order-sensitive word n-grams (space-joined strings) from an
+    array<string> column or expression, evaluated once per row. Empty
+    array when the document has fewer than ``n`` words (guards
+    sequence()'s descending-range behavior on start > stop)."""
     w = F.col(words_col) if isinstance(words_col, str) else words_col
-    upto = F.size(w) - F.lit(n - 1)
-    return F.when(
-        upto >= 1,
+    return _bind(w, lambda ws: F.when(
+        F.size(ws) >= n,
         F.transform(
-            F.sequence(F.lit(1), upto),
-            lambda i: F.array_join(F.slice(w, i, n), " "),
+            F.sequence(F.lit(1), F.size(ws) - (n - 1)),
+            lambda i: F.array_join(F.slice(ws, i, n), " "),
         ),
-    ).otherwise(F.array().cast("array<string>"))
+    ).otherwise(F.array().cast("array<string>")))
 
 
-def _words(text_col: str) -> Column:
-    return F.filter(F.split(F.lower(F.col(text_col)), r"\W+"), lambda x: x != "")
+def _words(text_col) -> Column:
+    c = F.col(text_col) if isinstance(text_col, str) else text_col
+    return F.filter(F.split(F.lower(c), r"\W+"), lambda x: x != "")
 
 
 def ngram_contamination(
@@ -62,16 +64,14 @@ def ngram_contamination(
     benchmark set, and the fraction (0.0 when the doc has no grams).
     Filter ``contamination >= threshold`` downstream to quarantine.
     """
-    d = docs.select(F.col(id_col), _words(text_col).alias("_ws"))
-    dg = d.select(
-        id_col, F.array_distinct(word_ngrams("_ws", n)).alias("_grams")
+    dg = docs.select(
+        F.col(id_col), F.array_distinct(word_ngrams(_words(text_col), n)).alias("_grams")
     )
     totals = dg.select(id_col, F.size("_grams").alias("n_grams"))
 
-    b = benchmark.select(_words(bench_text_col).alias("_ws"))
-    bench_grams = (
-        b.select(F.explode(word_ngrams("_ws", n)).alias("gram")).distinct()
-    )
+    bench_grams = benchmark.select(
+        F.explode(word_ngrams(_words(bench_text_col), n)).alias("gram")
+    ).distinct()
 
     per_gram = dg.select(id_col, F.explode("_grams").alias("gram"))
     matched = (

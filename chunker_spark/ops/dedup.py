@@ -23,6 +23,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import ArrayType, LongType
 
+from ..functions.text import _bind
+from .decontaminate import _words
+
 # ---- exact dedup -----------------------------------------------------
 
 
@@ -405,29 +408,26 @@ def simhash_expr(text_col, bits: int = 64) -> F.Column:
             "transform(filter(split(lower(`" + text_col + "`), '\\\\W+'),"
             " w -> w != ''), w -> xxhash64(w))"
         )
+        # the hash array is bound to ``hs`` once per row (the form of
+        # functions.text._bind), not re-tokenized inside every per-bit lambda
         return F.expr(
+            f"element_at(transform(array({hashes_sql}), hs -> "
             "aggregate(transform(array(" + mask_sql + "), m -> "
-            f"CASE WHEN size(filter({hashes_sql}, h -> (h & m) != 0)) * 2"
-            f" > size({hashes_sql}) THEN m ELSE CAST(0 AS BIGINT) END), "
-            "CAST(0 AS BIGINT), (acc, v) -> acc ^ v)"
+            "CASE WHEN size(filter(hs, h -> (h & m) != 0)) * 2"
+            " > size(hs) THEN m ELSE CAST(0 AS BIGINT) END), "
+            "CAST(0 AS BIGINT), (acc, v) -> acc ^ v)), 1)"
         )
     masks = F.array(
         *[F.lit((1 << i) if i < 63 else -(1 << 63)).cast("long") for i in range(bits)]
     )
-    words = F.filter(F.split(F.lower(text_col), r"\W+"), lambda w: w != "")
-    hashes = F.transform(words, lambda w: F.xxhash64(w))
-    return F.aggregate(
-        F.transform(
-            masks,
-            lambda m: F.when(
-                F.size(F.filter(hashes, lambda h: h.bitwiseAND(m) != 0)) * 2
-                > F.size(hashes),
-                m,
-            ).otherwise(F.lit(0).cast("long")),
-        ),
+    hashes = F.transform(_words(text_col), lambda w: F.xxhash64(w))
+    return _bind(hashes, lambda hs: F.aggregate(
+        F.transform(masks, lambda m: F.when(
+            F.size(F.filter(hs, lambda h: h.bitwiseAND(m) != 0)) * 2 > F.size(hs), m
+        ).otherwise(F.lit(0).cast("long"))),
         F.lit(0).cast("long"),
         lambda acc, v: acc.bitwiseXOR(v),
-    )
+    ))
 
 
 def _word_ngram_udf(n: int, max_ngrams: int | None = None):

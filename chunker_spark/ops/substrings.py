@@ -41,19 +41,24 @@ more than one document's tokens in memory at once. The suffix-array
 original needs corpus-resident memory; this needs a shuffle.
 
 Composition caveat: ``clean_text`` is a nested higher-order-function
-expression (transform/filter/exists). Stacking SEVERAL such rewrite
-stages lazily into one projection (e.g. boilerplate splice -> this ->
-n-gram shingling) can push Spark's interpreted evaluator past its
-nested-lambda depth (observed as ``INTERNAL_ERROR Cannot evaluate
-expression`` on Spark 4.1). Persist a stage boundary between major
-rewrite stages — a lake write in production, ``localCheckpoint()`` in
-process — exactly as examples/curation_pipeline.py does.
+expression (transform/filter/exists), and each token-array builder
+(``window_digests``, ``word_ngrams``, ``simhash_expr``) adds one level
+for the lambda variable its array is bound to (``_bind``). Stacking
+SEVERAL such rewrite stages lazily into one projection (e.g.
+boilerplate splice -> this -> n-gram shingling) can push Spark's
+interpreted evaluator past its nested-lambda depth (observed as
+``INTERNAL_ERROR Cannot evaluate expression`` on Spark 4.1). Persist
+a stage boundary between major rewrite stages — a lake write in
+production, ``localCheckpoint()`` in process — exactly as
+examples/curation_pipeline.py does.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
+
+from ..functions.text import _bind
 
 
 def window_digests(text_col, k: int):
@@ -64,14 +69,13 @@ def window_digests(text_col, k: int):
     both MUST tokenize/digest identically or incremental maintenance
     diverges from recompute."""
     words = F.split(F.trim(F.col(text_col) if isinstance(text_col, str) else text_col), r"\s+")
-    n = F.size(words)
-    return F.when(
-        n >= k,
+    return _bind(words, lambda ws: F.when(
+        F.size(ws) >= k,
         F.transform(
-            F.sequence(F.lit(0), n - k),
-            lambda i: F.md5(F.array_join(F.slice(words, i + 1, k), " ")),
+            F.sequence(F.lit(0), F.size(ws) - k),
+            lambda i: F.md5(F.array_join(F.slice(ws, i + 1, k), " ")),
         ),
-    ).otherwise(F.array().cast("array<string>"))
+    ).otherwise(F.array().cast("array<string>")))
 
 
 def duplicated_spans(

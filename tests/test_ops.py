@@ -767,17 +767,51 @@ def test_repetition_filters(spark):
         (1, "a b a b a b a b"),                                  # looping 2-grams
         (2, "all unique words in this single line"),
         (3, ""),
+        (4, "the end the end the end the end"),
+        (5, "To be, or not to be: TO BE or not to be!"),
+        (6, None),
     ]
     df = spark.createDataFrame(rows, "id long, text string")
     out = {r["id"]: r for r in df.select(
         "id",
         dup_line_fraction("text").alias("dl"),
         dup_ngram_fraction("text", 2).alias("dg"),
+        dup_ngram_fraction("text", 3).alias("dg3"),
     ).collect()}
     assert out[0]["dl"] == 0.5                      # 4 lines, 2 distinct
     assert out[1]["dg"] == round(1 - 2 / 7, 6)      # 7 bigrams, 2 distinct
     assert out[2]["dl"] == 0.0 and out[2]["dg"] == 0.0
     assert out[3]["dl"] == 0.0 and out[3]["dg"] == 0.0
+    # trigram known answers: lowercased \W+ words, repeated occurrences
+    # over all occurrences, 0.0 below 3 words
+    assert {i: out[i]["dg3"] for i in out} == {
+        0: round(1 - 4 / 6, 6), 1: round(1 - 2 / 6, 6), 2: 0.0, 3: 0.0,
+        4: 0.666667,  # 6 trigrams, 2 distinct
+        5: 0.4,       # 10 trigrams, 6 distinct
+        6: 0.0,
+    }
+
+
+def test_window_digests_known_answers(spark):
+    """Pin window_digests at k=3: md5 of each space-joined 3-token
+    window of the trimmed, \\s+-split text; empty below k tokens."""
+    from chunker_spark.ops.substrings import window_digests
+
+    rows = [(0, "  the cat  sat on\tthe mat "), (1, "only two"), (2, ""), (3, None)]
+    df = spark.createDataFrame(rows, "id long, text string")
+    got = {r["id"]: r["d"] for r in df.select(
+        "id", window_digests("text", 3).alias("d")).collect()}
+    assert got == {
+        0: [
+            "f52864162b55874ebd9954d13ebc974d",  # the cat sat
+            "abf43089e03714fc92af490adc3959b8",  # cat sat on
+            "53c08de1c082feb327756ef934e50e9b",  # sat on the
+            "9afe7a76c8c2518e89e23ebc3e063d29",  # on the mat
+        ],
+        1: [],
+        2: [],
+        3: [],
+    }
 
 
 def test_pii_redaction_and_counts(spark):

@@ -3,18 +3,33 @@
 Each optimization that replaced a Column-by-Column expression builder
 with a single SQL string (or a per-process cached plan) gets a test
 proving the fast path computes EXACTLY what the original construction
-computes — schema and rows — so the rewrites can never drift from the
-semantics the oracles pinned.
+computes — schema and rows — or, where the original builder is gone,
+what an independent reference computes, so the rewrites can never
+drift from the semantics the oracles pinned.
 """
 
 import pytest
 from pyspark.sql import functions as F
 
 
-# ---- kmeans_assign: SQL fast path vs Column construction -------------
+# ---- kmeans_assign: SQL fast path vs an independent reference ------
 
-def test_kmeans_assign_sql_equals_column_construction(spark):
-    from chunker_spark.ops.clustering import _sq_dist, kmeans_assign
+def _sq_dist_reference(vec, cent) -> float:
+    """Squared L2 as a left-to-right float64 fold (the op's fold
+    order), rounded to 6 places the way Spark's ``round`` does:
+    HALF_UP on the shortest decimal form of the double."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    import numpy as np
+
+    acc = np.float64(0.0)
+    for a, b in zip(np.asarray(vec, np.float64), np.asarray(cent, np.float64)):
+        acc = acc + (a - b) * (a - b)
+    return float(Decimal(repr(float(acc))).quantize(Decimal("1e-6"), ROUND_HALF_UP))
+
+
+def test_kmeans_assign_equals_numpy_reference(spark):
+    from chunker_spark.ops.clustering import kmeans_assign
 
     rows = [
         (0, [0.0, 0.0, 0.0]),
@@ -27,23 +42,16 @@ def test_kmeans_assign_sql_equals_column_construction(spark):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     cents = [(0, [1.0, 0.0, 0.0]), (1, [3.0, 0.0, 0.0]), (2, [0.5, 0.5, 0.5])]
 
-    new = kmeans_assign(df, cents)
-
-    v = F.col("embedding").cast("array<double>")
-    structs = F.array(
-        *[
-            F.struct(
-                F.round(_sq_dist(v, vec), 6).alias("d"),
-                F.lit(int(cid)).alias("cid"),
-            )
-            for cid, vec in cents
-        ]
-    )
-    best = F.array_min(structs)
-    old = df.withColumn("cluster", best["cid"]).withColumn("sq_dist", best["d"])
-
-    assert new.schema == old.schema
-    assert new.exceptAll(old).count() == 0 and old.exceptAll(new).count() == 0
+    out = kmeans_assign(df, cents)
+    assert out.dtypes[-2:] == [("cluster", "int"), ("sq_dist", "double")]
+    got = {r["vec_id"]: (r["cluster"], r["sq_dist"]) for r in out.collect()}
+    # min over (distance, cid): ties on the distance go to the lower cid
+    want = {
+        vid: min((_sq_dist_reference(vec, c), cid) for cid, c in cents)[::-1]
+        for vid, vec in rows
+    }
+    assert got == want
+    assert got[4] == (0, 1.0)
 
 
 # ---- simhash: SQL fast path vs Column path ---------------------------

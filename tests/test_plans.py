@@ -646,3 +646,70 @@ def test_bloom_probe_is_broadcast_no_text_shuffle(spark):
     for line in plan.splitlines():
         if "Exchange" in line and "Broadcast" not in line:
             assert "text" not in line, line
+
+
+# ---- lambda hoisting guard --------------------------------------------
+
+#: Catalyst string/regex/hash expression classes (simple-name prefixes):
+#: too costly to evaluate again on every lambda call.
+_COSTLY_OPS = (
+    "StringSplit", "RegExp", "RLike", "Lower", "Upper", "StringTrim",
+    "XxHash64", "Murmur3Hash", "Md5", "Sha1", "Sha2", "Crc32",
+)
+
+
+def _seq(s):
+    return [s.apply(i) for i in range(s.size())]
+
+
+def _uses_lambda_var(expr, in_body, found) -> bool:
+    """Walk a JVM Catalyst expression. Inside a lambda body, add to
+    ``found`` the class name of every non-foldable costly op that
+    references no lambda variable: it is the same value on every lambda
+    call, yet higher-order functions run interpreted and common
+    subexpression elimination skips their bodies, so it is recomputed
+    per call. Returns whether ``expr`` references a lambda variable."""
+    name = expr.getClass().getSimpleName()
+    if name == "NamedLambdaVariable":
+        return True
+    if name == "LambdaFunction":
+        return _uses_lambda_var(expr.function(), True, found)
+    has_var = False
+    for child in _seq(expr.children()):
+        has_var |= _uses_lambda_var(child, in_body, found)
+    if in_body and not has_var and name.startswith(_COSTLY_OPS) and not expr.foldable():
+        found.add(name)
+    return has_var
+
+
+def _lambda_hoisting_violations(plan, lambda_pattern) -> set[str]:
+    """Costly ops recomputed per lambda call anywhere in a logical plan;
+    only trees whose pattern bits contain a lambda are walked."""
+    found: set[str] = set()
+    stack = [plan]
+    while stack:
+        node = stack.pop()
+        for e in _seq(node.expressions()):
+            if e.containsPattern(lambda_pattern):
+                _uses_lambda_var(e, False, found)
+        stack.extend(c for c in _seq(node.children()) if c.containsPattern(lambda_pattern))
+        stack.extend(_seq(node.subqueries()))
+    return found
+
+
+def test_no_costly_expression_recomputed_inside_lambdas(spark):
+    """Every query's optimized plan evaluates each string/regex/hash
+    expression once per row: none sits inside a higher-order-function
+    lambda body without depending on the lambda's variables (bind it to
+    a lambda variable outside instead, see functions.text._bind)."""
+    import __spark_entry__ as e
+
+    lambda_pattern = spark._jvm.org.apache.spark.sql.catalyst.trees.TreePattern.LAMBDA_FUNCTION()
+    bad = {}
+    for name, qfn in sorted(e.queries().items()):
+        found = _lambda_hoisting_violations(
+            qfn(spark, SF)._jdf.queryExecution().optimizedPlan(), lambda_pattern
+        )
+        if found:
+            bad[name] = sorted(found)
+    assert not bad, bad
