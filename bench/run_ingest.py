@@ -167,9 +167,9 @@ def main() -> None:
             params=SOURCE_PARAMS,
             max_files_per_trigger=per_trigger,
             # throughput protocol measures the one-job-per-batch hot
-            # path; the metrics/lineage pipeline (extra per-batch
-            # actions incl. an O(touched-buckets) state read for
-            # chunk-reuse stats) is --metrics, measured separately
+            # path; the metrics/lineage pipeline (one extra per-batch
+            # action, the chunk-reuse count over the batch keys'
+            # history) is --metrics, measured separately
             collect_metrics=args.metrics,
         )
         t0 = time.time()

@@ -63,8 +63,9 @@ pre-image-less delete has no row image and goes to the DLQ.
 
 from __future__ import annotations
 
-from functools import lru_cache
+from functools import lru_cache, wraps
 
+from pyspark import SparkContext
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -284,8 +285,24 @@ def _project_event(parsed: DataFrame, op, seq, ts, img, extra=()) -> DataFrame:
 # pure expression metadata, no data, no results, no session state
 # (same per-process contract as the parquet schema cache in
 # __spark_entry__._pq). Columns hold py4j refs into the driver JVM, so
-# the cache assumes one JVM gateway per process (true for every entry
-# point in this repo: bench, tests, streaming drivers).
+# plans are cached per gateway (``_plan_cache``).
+
+
+def _plan_cache(build):
+    """``lru_cache`` keyed to the live py4j gateway as well as the
+    arguments. A plan's Columns are refs into one driver JVM: after the
+    session is stopped and a new one launches a new gateway in the same
+    process, an old plan's refs name no object, or a different one, in
+    the new JVM. A Connect session has no gateway (key ``None``) and
+    pure-Python Columns."""
+    cached = lru_cache(maxsize=None)(lambda _gateway, *args: build(*args))
+
+    @wraps(build)
+    def plan(*args):
+        return cached(SparkContext._gateway, *args)
+
+    plan.cache_clear = cached.cache_clear
+    return plan
 
 
 def _apply_plan(raw: DataFrame, plan) -> DataFrame:
@@ -324,7 +341,7 @@ def parse_debezium(
     return _apply_plan(raw, _debezium_plan(value_col, bool(keep_raw), bool(with_old_keys)))
 
 
-@lru_cache(maxsize=None)
+@_plan_cache
 def _debezium_plan(value_col: str, keep_raw: bool, with_old_keys: bool):
     env = F.col("_env")
     op = _op_expr(env["op"], _DEBEZIUM_OPS)
@@ -380,7 +397,7 @@ def parse_maxwell(
     return _apply_plan(raw, _maxwell_plan(value_col, bool(keep_raw), bool(with_old_keys)))
 
 
-@lru_cache(maxsize=None)
+@_plan_cache
 def _maxwell_plan(value_col: str, keep_raw: bool, with_old_keys: bool):
     env = F.col("_env")
     row_filter = env["type"].isNull() | ~env["type"].isin(*_MAXWELL_NON_ROW_TYPES)
@@ -449,7 +466,7 @@ def parse_wal2json(
     )
 
 
-@lru_cache(maxsize=None)
+@_plan_cache
 def _wal2json_plan(value_col: str, keep_raw: bool, with_txn: bool, with_old_keys: bool):
     env = F.col("_env")
     row_filter = env["action"].isNull() | ~env["action"].isin(
@@ -540,7 +557,7 @@ def parse_canal(
     return _apply_plan(raw, _canal_plan(value_col, bool(keep_raw), bool(with_old_keys)))
 
 
-@lru_cache(maxsize=None)
+@_plan_cache
 def _canal_plan(value_col: str, keep_raw: bool, with_old_keys: bool):
     env = F.col("_env")
     row_filter = env["isDdl"].isNull() | ~F.lower(env["isDdl"]).isin("true", "1")
@@ -603,7 +620,7 @@ def parse_dms(raw: DataFrame, value_col: str = "value", keep_raw: bool = False) 
     return _apply_plan(raw, _dms_plan(value_col, bool(keep_raw)))
 
 
-@lru_cache(maxsize=None)
+@_plan_cache
 def _dms_plan(value_col: str, keep_raw: bool):
     env = F.col("_env")
     meta = env["metadata"]
@@ -663,7 +680,7 @@ def parse_mongo(raw: DataFrame, value_col: str = "value", keep_raw: bool = False
     return _apply_plan(raw, _mongo_plan(value_col, bool(keep_raw)))
 
 
-@lru_cache(maxsize=None)
+@_plan_cache
 def _mongo_plan(value_col: str, keep_raw: bool):
     env = F.col("_env")
     op = _op_expr(env["op"], _DEBEZIUM_OPS)
@@ -733,7 +750,7 @@ def parse_goldengate(
     )
 
 
-@lru_cache(maxsize=None)
+@_plan_cache
 def _goldengate_plan(value_col: str, keep_raw: bool, with_old_keys: bool):
     env = F.col("_env")
     row_filter = ~F.coalesce(env["op_type"] == F.lit("T"), F.lit(False))

@@ -26,13 +26,16 @@ Iceberg v2 (data files + positional semantics kept logical):
 
 Bucketing uses ``xxhash64(repo, path) pmod num_buckets`` — deterministic
 across runs, so delta and base files of a key always share a bucket and
-resolution never re-shuffles more than one bucket's rows.
+resolution never re-shuffles more than one bucket's rows. ``key_bucket``
+computes the same bucket on the driver, so a point lookup opens one
+bucket's files without a Spark job.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import struct
 import time
 import uuid
 
@@ -45,15 +48,74 @@ def bucket_expr(num_buckets: int, key_cols=KEY_COLS) -> F.Column:
     return F.pmod(F.xxhash64(*[F.col(c) for c in key_cols]), F.lit(num_buckets))
 
 
+_M64 = (1 << 64) - 1
+_P1, _P2, _P3 = 0x9E3779B185EBCA87, 0xC2B2AE3D27D4EB4F, 0x165667B19E3779F9
+_P4, _P5 = 0x85EBCA77C2B2AE63, 0x27D4EB2F165667C5
+
+
+def _rotl(x: int, r: int) -> int:
+    return ((x << r) | (x >> (64 - r))) & _M64
+
+
+def _xxh64_round(acc: int, lane: int) -> int:
+    return _rotl((acc + lane * _P2) & _M64, 31) * _P1 & _M64
+
+
+def _xxh64(data: bytes, seed: int) -> int:
+    """XXH64 of ``data`` (little-endian lanes, unsigned 64-bit result) —
+    the algorithm behind Spark's ``xxhash64``."""
+    n, i = len(data), 0
+    if n >= 32:
+        v = [(seed + _P1 + _P2) & _M64, (seed + _P2) & _M64, seed, (seed - _P1) & _M64]
+        while i <= n - 32:
+            v = [_xxh64_round(a, k) for a, k in zip(v, struct.unpack_from("<4Q", data, i))]
+            i += 32
+        h = (_rotl(v[0], 1) + _rotl(v[1], 7) + _rotl(v[2], 12) + _rotl(v[3], 18)) & _M64
+        for a in v:
+            h = ((h ^ _xxh64_round(0, a)) * _P1 + _P4) & _M64
+    else:
+        h = (seed + _P5) & _M64
+    h = (h + n) & _M64
+    while i + 8 <= n:
+        h ^= _xxh64_round(0, struct.unpack_from("<Q", data, i)[0])
+        h = (_rotl(h, 27) * _P1 + _P4) & _M64
+        i += 8
+    if i + 4 <= n:
+        h ^= struct.unpack_from("<I", data, i)[0] * _P1 & _M64
+        h = (_rotl(h, 23) * _P2 + _P3) & _M64
+        i += 4
+    for b in data[i:]:
+        h ^= b * _P5 & _M64
+        h = _rotl(h, 11) * _P1 & _M64
+    h = (h ^ (h >> 33)) * _P2 & _M64
+    h = (h ^ (h >> 29)) * _P3 & _M64
+    return h ^ (h >> 32)
+
+
+def key_bucket(key: tuple[str | None, ...], num_buckets: int) -> int:
+    """``bucket_expr`` evaluated on the driver for one key, with no Spark
+    job: Spark's ``xxhash64`` chains XXH64 over the columns' UTF-8 bytes
+    from seed 42 (each hash seeds the next; a null column is skipped),
+    and ``pmod`` of the signed result picks the bucket."""
+    h = 42
+    for v in key:
+        if v is not None:
+            h = _xxh64(v.encode("utf-8"), h)
+    return (h - (1 << 64) if h >> 63 else h) % num_buckets
+
+
 def _file_key_ranges(paths: list[str]) -> dict[str, list[str | None]]:
     """Per-file COMPOSITE key range [first_repo, first_path, last_repo,
     last_path]. Files are written sorted by (repo, path, seq), so the
-    first and last rows ARE the lexicographic key bounds — unlike
-    independent per-column min/max, the composite range stays tight
-    when one file spans many repos (the common case with few repos and
-    hash bucketing). Reads only the key columns of the first and last
-    row groups, driver-side, O(new files) per commit. A file that can't
-    be read maps to Nones (never pruned)."""
+    first and last rows ARE the lexicographic key bounds. Hash bucketing
+    scatters keys, so a bucket's file usually spans most of the key space
+    and the range prunes little on its own (with ranges as the only
+    pruning, a lookup in the 16-bucket ingest benchmark opened a median
+    of 51 files); it prunes within the key's bucket, which
+    ``read_files(key=...)`` selects first. Reads only
+    the key columns of the first and last row groups, driver-side,
+    O(new files) per commit. A file that can't be read maps to Nones
+    (never pruned)."""
     import pyarrow.parquet as pq
 
     out: dict[str, list[str | None]] = {}
@@ -83,8 +145,8 @@ def resolve_state(files_df: DataFrame, drop_tombstones: bool = True) -> DataFram
     The key columns stay GROUPING columns in the output (only non-key
     fields ride the max_by struct): extracting keys back out of the
     struct would mint fresh attribute ids, and every downstream
-    key-equi-join (the CDF diff, the lineage reuse join) would then
-    re-Exchange what is already hash-partitioned by key — the plan
+    key-equi-join (e.g. the CDF diff) would then re-Exchange what is
+    already hash-partitioned by key — the plan
     audit showed one redundant Exchange per resolve consumer (guide
     §2.4: two operations keyed the same way share one exchange). Also
     ~key-width fewer bytes per shuffled row."""
@@ -98,6 +160,12 @@ def resolve_state(files_df: DataFrame, drop_tombstones: bool = True) -> DataFram
     if drop_tombstones:
         resolved = resolved.where(~F.col("deleted"))
     return resolved
+
+
+#: Spark lists the files of a read on the driver up to this many paths
+#: and starts a distributed listing job (one task per path) above it.
+_LISTING_THRESHOLD_CONF = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+_DRIVER_LISTING_THRESHOLD = 2**31 - 1
 
 
 class LakeTable:
@@ -134,6 +202,8 @@ class LakeTable:
             raise ValueError(
                 f"LakeTable root must be a POSIX path (e.g. a mounted volume), got {root!r}"
             )
+        if int(spark.conf.get(_LISTING_THRESHOLD_CONF)) < _DRIVER_LISTING_THRESHOLD:
+            spark.conf.set(_LISTING_THRESHOLD_CONF, str(_DRIVER_LISTING_THRESHOLD))
         self.spark = spark
         self.root = root.rstrip("/")
         self.num_buckets = num_buckets
@@ -231,13 +301,17 @@ class LakeTable:
     ) -> DataFrame:
         """Raw delta/base rows (with seq + deleted), unresolved.
         ``at`` selects a historical commit (time travel). ``key`` is a
-        (repo, path) point-lookup hint: files whose composite
+        (repo, path) point-lookup hint: only the key's bucket is read,
+        hashed with the bucket count of the commit being read (``at``
+        may predate a rebucket), and within it files whose composite
         first/last-row key range excludes the key are skipped entirely
         (data skipping on the key-sorted files; a file whose footer
         could not be read has a null range and is always read)."""
         commit = self.commit_at(at) if at is not None else self.current_commit()
         paths = self._files_for(commit, buckets)
         if key is not None and commit:
+            kb = key_bucket(key, int(commit["num_buckets"]))
+            in_bucket = set(self._files_for(commit, [kb]))
             fstats = commit["file_stats"]
             key_t = (key[0], key[1])
 
@@ -247,7 +321,7 @@ class LakeTable:
                     return True  # unreadable footer -> can't prune
                 return (s[0], s[1]) <= key_t <= (s[2], s[3])
 
-            paths = [p for p in paths if may_contain(p)]
+            paths = [p for p in paths if p in in_bucket and may_contain(p)]
         if not paths:
             return self.spark.createDataFrame([], FILE_SCHEMA)
         return self.spark.read.schema(FILE_SCHEMA).parquet(*paths)
@@ -261,10 +335,10 @@ class LakeTable:
         )
 
     def lookup(self, repo: str, path: str, at: int | None = None) -> DataFrame:
-        """Point lookup of one key with file-level data skipping: only
-        files whose (repo, path) footer range can contain the key are
-        opened — on a well-compacted table that is one file per lookup
-        instead of the bucket's whole history."""
+        """Point lookup of one key: reads only the key's bucket (computed
+        on the driver with ``key_bucket``, no Spark job), and within it
+        only files whose (repo, path) footer range can contain the key —
+        so at most the bucket's live files, which compaction bounds."""
         pruned = self.read_files(at=at, key=(repo, path))
         return (
             resolve_state(pruned)

@@ -21,8 +21,12 @@ scale:
    append as new bucket-partitioned files (O(batch) write volume);
    readers resolve last-writer-wins per key and compaction keeps
    per-bucket file counts bounded (lake.py).
-6. **Lineage/metrics** — per-bucket row/byte/chunk counts and chunk
-   reuse (skip-on-update) recorded with the commit.
+6. **Lineage/metrics** (``collect_metrics``) — per-bucket row/byte/
+   chunk counts ride the delta write as an Observation; chunk reuse
+   (skip-on-update) is one more action: one aggregate over the written
+   upserts and the unresolved prior rows of the batch's keys (semi-join
+   pruned), so its cost tracks the batch keys' history, not the touched
+   buckets' data.
 """
 
 from __future__ import annotations
@@ -164,7 +168,7 @@ def apply_batch(
     # while a snapshot-scale batch fans out to at most _SALT_BUCKETS
     # files per bucket, each advisory-sized.
     # (No cache anywhere: the metrics path reads the just-written delta
-    # files for its reuse join instead of pinning the batch in memory —
+    # files for its reuse count instead of pinning the batch in memory —
     # caching would also block AQE from re-coalescing the exchange,
     # InMemoryRelation partitioning is frozen, which fanned a 20-row
     # batch into one tiny file per (bucket, salt) group when tried.)
@@ -187,11 +191,9 @@ def apply_batch(
         # action instead of a separate aggregate job (the former
         # dedicated collect was itself the r4 fix for THREE metric
         # actions; this removes the remaining one — guide §1.2,
-        # fewer passes). The chunk-reuse join then reads the written
+        # fewer passes). The chunk-reuse count then reads the written
         # delta files back (column-pruned), never a cached batch.
         from pyspark.sql import Observation
-
-        from .lake import resolve_state
 
         nb = lake.num_buckets
         is_up = ~F.col("deleted")
@@ -212,7 +214,7 @@ def apply_batch(
             """Runs inside append_delta AFTER the delta files land
             (observation resolved, touched buckets known) and BEFORE
             the commit JSON is written — the prior commit still
-            defines the old state for the reuse join. The reuse
+            defines the old state for the reuse count. The reuse
             side reads the JUST-WRITTEN delta files (column-pruned
             to repo/path/manifest) rather than a cached copy of the
             batch — same rows by construction, no cache memory, no
@@ -228,12 +230,12 @@ def apply_batch(
                 "lww_strategy": lww,
             }
             # chunk-reuse lineage compares only against prior
-            # versions of THIS batch's keys, so prune the old-state
-            # read to them BEFORE resolution: a broadcast semi-join
+            # versions of THIS batch's keys, so prune the old rows to
+            # them BEFORE the reuse aggregate: a broadcast semi-join
             # on the key set keeps the metrics path O(batch keys'
             # history) instead of O(touched buckets' full table
             # data) — without it the lineage stats re-scan and
-            # re-resolve ever more table per batch as buckets fill
+            # re-aggregate ever more table per batch as buckets fill
             # (measured ~85s/1.6M events extra at local[1] on an
             # un-pruned read; see BENCH/BASELINE.md r3). A first
             # commit has no prior files at all: reuse is 0 by
@@ -243,7 +245,6 @@ def apply_batch(
                 from .schema import FILE_SCHEMA
 
                 written = spark.read.schema(FILE_SCHEMA).parquet(*new_paths)
-                old_files = lake.read_files(buckets=touched)
                 # no distinct(): batch is post-LWW, one row per key
                 # by construction — the former distinct was a pure
                 # extra shuffle, and a semi-join build side needs no
@@ -257,11 +258,11 @@ def apply_batch(
                 # blowup. Shuffle semi-join in that regime.
                 if use_broadcast:
                     batch_keys = F.broadcast(batch_keys)
-                old_state = resolve_state(
-                    old_files.join(batch_keys, list(KEY_COLS), "left_semi")
+                old_rows = lake.read_files(buckets=touched).join(
+                    batch_keys, list(KEY_COLS), "left_semi"
                 )
                 stats["reused_chunks"] = _reused_chunks(
-                    written.where(~F.col("deleted")), old_state
+                    written.where(~F.col("deleted")), old_rows
                 )
             else:
                 stats["reused_chunks"] = 0
@@ -315,16 +316,31 @@ def bootstrap_snapshot(
     return apply_batch(lake, events, batch_id, params=params, **apply_kwargs)
 
 
-def _reused_chunks(upserts: DataFrame, old: DataFrame) -> int:
-    """Chunk-reuse lineage: how many chunk hashes of updated files
-    already existed in the prior state — the skip-on-update win. The
-    only metrics action that genuinely needs a second pass (it joins
-    against resolved old state; the volume sums ride the per-bucket
-    aggregate in apply_batch)."""
-    new_chunks = upserts.select(
-        "repo", "path", F.explode("manifest").alias("c")
-    ).select("repo", "path", F.col("c.chunk_sha256").alias("h"))
-    old_chunks = old.select(
-        "repo", "path", F.explode("manifest").alias("c")
-    ).select("repo", "path", F.col("c.chunk_sha256").alias("h"))
-    return int(new_chunks.join(old_chunks, ["repo", "path", "h"], "left_semi").count())
+def _reused_chunks(upserts: DataFrame, old_rows: DataFrame) -> int:
+    """Chunk-reuse lineage: how many chunk entries of the batch's
+    upserts already existed in their key's prior LIVE version — the
+    skip-on-update win. ``old_rows`` are the prior files' UNRESOLVED
+    rows of the batch's keys: one grouping over both inputs takes, per
+    key, the new hash array and the max-``seq`` old (deleted, hashes),
+    so resolution and the reuse match share one shuffle. Every new
+    entry counts, repeated hashes included; a tombstoned or absent prior
+    version reuses nothing. One ``count()`` action."""
+    hashes = F.col("manifest.chunk_sha256")
+    no_seq = F.lit(None).cast("long")
+    new = upserts.select(
+        *KEY_COLS, F.col("seq").alias("new_seq"), no_seq.alias("old_seq"),
+        F.lit(False).alias("deleted"), hashes.alias("h"),
+    )
+    old = old_rows.select(
+        *KEY_COLS, no_seq.alias("new_seq"), F.col("seq").alias("old_seq"),
+        "deleted", hashes.alias("h"),
+    )
+    per_key = new.unionByName(old).groupBy(*KEY_COLS).agg(
+        F.max_by("h", "new_seq").alias("new_h"),  # null orderings are skipped
+        F.max_by(F.struct("deleted", "h"), "old_seq").alias("old"),
+    )
+    return int(
+        per_key.where(~F.col("old.deleted"))
+        .select(F.explode(F.filter("new_h", lambda h: F.array_contains("old.h", h))))
+        .count()
+    )

@@ -202,11 +202,13 @@ class IngestStream:
         self.kafka_topic = kafka_topic
         self.kafka_options = dict(kafka_options or {})
         # metrics/lineage rows are the default (production observability)
-        # but cost extra Spark actions per batch — including a read of
-        # the touched buckets' CURRENT state for the chunk-reuse stats,
-        # which is O(touched table data), not O(batch). Throughput
-        # benches and bulk backfills turn this off to get the documented
-        # one-job-per-batch hot path (merge.apply_batch).
+        # but cost one extra Spark action per batch: the chunk-reuse
+        # count, one aggregate over the batch's upserts and the prior
+        # rows of its keys (semi-join pruned, so O(batch keys' history),
+        # not O(touched table data)), plus the driver-side metrics
+        # append. Throughput benches and bulk backfills turn this off to
+        # get the documented one-job-per-batch hot path
+        # (merge.apply_batch).
         self.collect_metrics = collect_metrics
         # DLQ scope: Spark restarts micro-batch ids at 0 for every new
         # checkpoint, so keying DLQ dirs by batch id alone would let a

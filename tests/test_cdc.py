@@ -1275,3 +1275,147 @@ def test_metrics_path_two_actions_and_exact_values(spark, tmp_path, monkeypatch)
         assert sum(int(v) for v in s["keys_per_bucket"].values()) == len(win)
     # updated keys share chunks with their prior versions
     assert commits["b1"]["stats"]["reused_chunks"] > 0
+
+
+def test_reused_chunks_matches_resolve_then_semi_join(spark):
+    """The one-aggregate chunk-reuse count equals the two-shuffle
+    formulation it replaced (resolve the old state, then semi-join the
+    exploded new chunks against it) and a driver-side oracle, on data
+    with reuse, keys with several prior versions, tombstoned prior
+    versions (latest and earlier), hashes repeated within one manifest,
+    keys with no prior version and prior rows of keys the batch deletes."""
+    import random
+
+    from chunker_spark.cdc.lake import resolve_state
+    from chunker_spark.cdc.merge import _reused_chunks
+
+    rng = random.Random(5)
+    alphabet = [f"h{i:02d}" for i in range(12)]  # small: repeats within a manifest
+
+    def manifest():
+        return [rng.choice(alphabet) for _ in range(rng.randrange(1, 9))]
+
+    old, new = [], []
+    for k in range(80):
+        key = (f"r{k % 3}", f"p{k}")
+        seqs = sorted(rng.sample(range(1, 1000), rng.randrange(0, 5)))
+        for s in seqs:
+            dead = rng.random() < 0.3
+            old.append((*key, s, dead, None if dead else manifest()))
+        if k % 7 != 6:  # every 7th key: prior rows only (a batch delete)
+            new.append((*key, 2000 + k, False, manifest()))
+    schema = "repo string, path string, seq long, deleted boolean, manifest_h array<string>"
+    as_manifest = F.transform("manifest_h", lambda h: F.struct(h.alias("chunk_sha256")))
+
+    def frame(rows, parts):
+        return (
+            spark.createDataFrame(rows, schema)
+            .repartition(parts)  # several versions of a key meet only after the shuffle
+            .select("repo", "path", "seq", "deleted", as_manifest.alias("manifest"))
+        )
+
+    upserts, old_rows = frame(new, 2), frame(old, 3)
+
+    def exploded(df):
+        return df.select("repo", "path", F.explode("manifest.chunk_sha256").alias("h"))
+
+    reference = exploded(upserts).join(
+        exploded(resolve_state(old_rows)), ["repo", "path", "h"], "left_semi"
+    ).count()
+
+    latest: dict[tuple, tuple] = {}
+    for r, p, s, dead, hs in old:
+        if (r, p) not in latest or s > latest[(r, p)][0]:
+            latest[(r, p)] = (s, dead, hs)
+    oracle = 0
+    for r, p, _s, _dead, hs in new:
+        prior = latest.get((r, p))
+        if prior and not prior[1]:
+            oracle += sum(h in prior[2] for h in hs)
+
+    assert oracle > 0
+    assert any(v[1] for v in latest.values())  # some latest prior is a tombstone
+    assert any(len(hs) > len(set(hs)) for *_k, hs in new)
+    assert _reused_chunks(upserts, old_rows) == reference == oracle
+
+
+def test_key_bucket_matches_bucket_expr(spark):
+    """The driver-side bucket equals Spark's ``bucket_expr`` on random
+    keys: empty, non-ASCII and longer-than-32-byte strings (the XXH64
+    stripe loop), at several bucket counts."""
+    import random
+
+    from chunker_spark.cdc.lake import bucket_expr, key_bucket
+
+    rng = random.Random(11)
+    alphabet = "abz/._-09 éßж漢字😀"
+    keys = [("", ""), ("", "x"), ("a" * 32, "b" * 33), ("😀" * 9, "é" * 17)] + [
+        tuple("".join(rng.choice(alphabet) for _ in range(rng.randrange(0, 70))) for _ in "rp")
+        for _ in range(1200)
+    ]
+    assert any(len(r.encode()) > 32 for r, _p in keys)
+    df = spark.createDataFrame(keys, "repo string, path string")
+    for nb in (1, 7, 16, 1024):
+        got = df.select("repo", "path", bucket_expr(nb).alias("b")).collect()
+        bad = [(r.repo, r.path) for r in got if key_bucket((r.repo, r.path), nb) != r.b]
+        assert bad == [], (nb, bad[:3])
+
+
+_LISTING_JOB = "Listing leaf files and directories"
+
+
+def _listing_jobs(spark, action) -> list[str]:
+    """Run ``action``; return the names/descriptions of the distributed
+    file-listing jobs Spark started meanwhile, read from the application
+    status store (populated with the UI off)."""
+    sc = spark.sparkContext._jsc.sc()
+
+    def jobs():
+        sc.listenerBus().waitUntilEmpty()
+        it = sc.statusStore().jobsList(None).iterator()
+        out = []
+        while it.hasNext():
+            j = it.next()
+            desc = j.description()
+            out.append((int(j.jobId()), f"{j.name()} {desc.get() if desc.isDefined() else ''}"))
+        return out
+
+    before = max((i for i, _ in jobs()), default=-1)
+    action()
+    return [text for i, text in jobs() if i > before and _LISTING_JOB in text]
+
+
+def test_lake_reads_list_files_on_the_driver(spark, tmp_path):
+    """Above 32 paths Spark lists a read's files with a distributed job,
+    one task per path. A LakeTable lists them on the driver instead: no
+    listing job for one streaming micro-batch over 40 source segments, a
+    lake read of more than 32 files, a compaction or a lookup."""
+    from chunker_spark.cdc.lake import key_bucket
+
+    seg_dir = str(tmp_path / "segments")
+    write_segments(spark, SPEC, 400, seg_dir, n_segments=40)
+    lake = LakeTable(spark, str(tmp_path / "lake"), num_buckets=4, compact_threshold=1000)
+    stream = IngestStream(spark, lake, seg_dir, str(tmp_path / "ckpt"), params=PARAMS)
+    assert _listing_jobs(spark, stream.run_available) == []
+    assert lake.current_commit()["commit_seq"] == 0  # one micro-batch, 40 segments
+
+    events = list(gen_events_local(SPEC, 760))[400:]
+    for i in range(9):
+        batch = _events_df(spark, events[i * 40 : (i + 1) * 40])
+        apply_batch(lake, batch, f"x{i}", params=PARAMS, collect_metrics=False)
+    n_files = sum(len(fl) for fl in lake.current_commit()["files"].values())
+    assert n_files > 32
+    assert _listing_jobs(spark, lambda: lake.read().count()) == []
+
+    lake.compact_threshold = 8
+    last = _events_df(spark, events[:40])
+    assert _listing_jobs(
+        spark, lambda: apply_batch(lake, last, "compact", params=PARAMS, collect_metrics=False)
+    ) == []
+    commit = lake.current_commit()
+    assert commit["kind"] == "delta+compact"
+
+    key = (events[0]["repo"], events[0]["path"])
+    assert _listing_jobs(spark, lambda: lake.lookup(*key).collect()) == []
+    bucket_files = commit["files"][str(key_bucket(key, commit["num_buckets"]))]
+    assert 0 < len(lake.read_files(key=key).inputFiles()) <= len(bucket_files)

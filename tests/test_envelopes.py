@@ -1570,3 +1570,39 @@ def test_parser_kwargs_validated_at_construction(spark, tmp_path):
     with _pytest.raises(ValueError, match="not accepted by the 'dms' parser"):
         IngestStream(spark, lake, str(tmp_path), str(tmp_path / "ckpt"),
                      wire_format="dms", parser_kwargs={"with_old_keys": True})
+
+
+def test_parser_plans_survive_session_recreation():
+    """Cached parser plans are keyed to the py4j gateway: a session
+    stopped and re-created in the same process, with a new gateway and
+    JVM, parses Debezium again instead of reusing Column refs into the
+    JVM that is gone."""
+    import os
+    import subprocess
+    import sys
+
+    code = (
+        "import json\n"
+        "from pyspark import SparkContext\n"
+        "from pyspark.sql import SparkSession\n"
+        "from chunker_spark.cdc.envelopes import parse_debezium\n"
+        "env = json.dumps({'op': 'c', 'ts_ms': 1, 'before': None, 'source': {'lsn': '5'},\n"
+        "                  'after': {'repo': 'r', 'path': 'p', 'content': 'x'}})\n"
+        "def parse():\n"
+        "    s = (SparkSession.builder.master('local[1]')\n"
+        "         .config('spark.ui.enabled', 'false').getOrCreate())\n"
+        "    rows = parse_debezium(s.createDataFrame([(env,)], 'value string'))\n"
+        "    got = [(e.repo, e.path, e.seq, e.op) for e in rows.collect()]\n"
+        "    s.stop()\n"
+        "    return got\n"
+        "first = parse()\n"
+        "SparkContext._gateway.shutdown()\n"
+        "SparkContext._gateway = SparkContext._jvm = None\n"
+        "assert parse() == first == [('r', 'p', 5, 'I')], first\n"
+        "print('ok')\n"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    r = subprocess.run(
+        [sys.executable, "-c", code], cwd=root, capture_output=True, text=True, timeout=300
+    )
+    assert r.returncode == 0 and r.stdout.strip().endswith("ok"), r.stderr[-2000:]
