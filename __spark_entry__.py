@@ -2065,8 +2065,8 @@ def q_cdc_lineage(spark, sf):
     the per-batch volumes the ENGINE recorded against an independent SQL
     recomputation from the raw events (LWW winners per batch: upsert /
     delete row counts, upsert bytes, and total winner keys — which must
-    equal the sum of the per-bucket key counts the salted write
-    observed). Hash-dependent detail (which bucket each key lands in)
+    equal the sum of the per-bucket key counts the commit read from
+    its new files' footers). Hash-dependent detail (which bucket each key lands in)
     is engine-internal and aggregated out; everything else is exact."""
     import tempfile
 

@@ -17,9 +17,14 @@ Iceberg v2 (data files + positional semantics kept logical):
   ``compact_threshold`` files, the commit compacts it: its files are
   replaced by one resolved file. Tombstones are retained through
   compaction so late/reordered batches with older seqs stay harmless.
-* **Atomic commits.** One JSON manifest per commit listing
-  {bucket -> files}, written tmp-then-``os.rename``; the latest commit
-  defines the table; older commits stay readable (time-travel-lite).
+* **Atomic, put-if-absent commits.** One JSON manifest per commit
+  listing {bucket -> files}, written to a tmp file and published with
+  ``os.link``, which never replaces an existing ``commit-N.json``: of
+  two writers that read the same prior commit, one publishes N and the
+  other gets ``CommitConflict``. Each attempt writes its data under its
+  own ``snap-`` directory, so a losing writer never touches the
+  winner's files. The latest commit defines the table; older commits
+  stay readable (time-travel-lite).
 * **Exactly-once.** Every commit records its ``batch_id``; re-delivery
   of a committed micro-batch is detected and becomes a no-op. Files
   written by a crashed attempt are unreferenced and harmless.
@@ -104,25 +109,30 @@ def key_bucket(key: tuple[str | None, ...], num_buckets: int) -> int:
     return (h - (1 << 64) if h >> 63 else h) % num_buckets
 
 
-def _file_key_ranges(paths: list[str]) -> dict[str, list[str | None]]:
-    """Per-file COMPOSITE key range [first_repo, first_path, last_repo,
-    last_path]. Files are written sorted by (repo, path, seq), so the
-    first and last rows ARE the lexicographic key bounds. Hash bucketing
+def _read_footers(paths: list[str]) -> tuple[dict[str, list[str | None]], dict[str, int]]:
+    """Per file, its COMPOSITE key range [first_repo, first_path,
+    last_repo, last_path] and its row count (from the footer). Files
+    are written sorted by (repo, path, seq), so the first and last rows
+    ARE the lexicographic key bounds. Hash bucketing
     scatters keys, so a bucket's file usually spans most of the key space
     and the range prunes little on its own (with ranges as the only
     pruning, a lookup in the 16-bucket ingest benchmark opened a median
     of 51 files); it prunes within the key's bucket, which
     ``read_files(key=...)`` selects first. Reads only
     the key columns of the first and last row groups, driver-side,
-    O(new files) per commit. A file that can't be read maps to Nones
-    (never pruned)."""
+    O(new files) per commit. A file whose footer can't be opened
+    raises (a just-written file is unreadable: the commit must not
+    land); an empty file, or one whose key columns can't be read, maps
+    to Nones (never pruned)."""
     import pyarrow.parquet as pq
 
     out: dict[str, list[str | None]] = {}
+    rows: dict[str, int] = {}
     for p in paths:
+        pf = pq.ParquetFile(p)
+        rows[p] = pf.metadata.num_rows
         try:
-            pf = pq.ParquetFile(p)
-            if pf.metadata.num_rows == 0:
+            if rows[p] == 0:
                 raise ValueError("empty file")
             first_t = pf.read_row_group(0, columns=["repo", "path"])
             last_t = pf.read_row_group(pf.metadata.num_row_groups - 1, columns=["repo", "path"])
@@ -134,7 +144,7 @@ def _file_key_ranges(paths: list[str]) -> dict[str, list[str | None]]:
             ]
         except Exception:
             out[p] = [None, None, None, None]
-    return out
+    return out, rows
 
 
 def resolve_state(files_df: DataFrame, drop_tombstones: bool = True) -> DataFrame:
@@ -160,6 +170,24 @@ def resolve_state(files_df: DataFrame, drop_tombstones: bool = True) -> DataFram
     if drop_tombstones:
         resolved = resolved.where(~F.col("deleted"))
     return resolved
+
+
+class CommitConflict(RuntimeError):
+    """Another writer published this commit first: this attempt's
+    files stay unreferenced, and the batch may be re-run on top of the
+    new commit."""
+
+
+def _publish(tmp: str, final: str) -> None:
+    """Put-if-absent publish of a fully written ``tmp`` file: a hard link
+    fails on an existing ``final`` where ``os.rename`` would silently
+    replace it."""
+    try:
+        os.link(tmp, final)
+    except FileExistsError:
+        raise CommitConflict(f"{final} already exists: another writer published it") from None
+    finally:
+        os.remove(tmp)
 
 
 #: Spark lists the files of a read on the driver up to this many paths
@@ -198,7 +226,7 @@ class LakeTable:
         once per process and cached."""
         if "://" in root:
             # the commit log publishes through os.listdir / open /
-            # os.rename: a URI would silently become a local directory
+            # os.link: a URI would silently become a local directory
             raise ValueError(
                 f"LakeTable root must be a POSIX path (e.g. a mounted volume), got {root!r}"
             )
@@ -246,7 +274,7 @@ class LakeTable:
 
     def _ledger_chunk(self, name: str) -> frozenset[str]:
         """Read one spilled ledger chunk. Chunks are immutable once
-        written (tmp + rename, never appended), so the per-process
+        written (tmp + link, never appended), so the per-process
         cache makes the steady-state idempotency check O(1) reads: the
         commit JSON (with its bounded in-commit tail) is the only file
         re-read per batch; chunk files are read once per process
@@ -282,7 +310,7 @@ class LakeTable:
             json.dump(commit, f)
             f.flush()
             os.fsync(f.fileno())
-        os.rename(tmp, final)  # atomic commit point
+        _publish(tmp, final)  # atomic commit point
 
     # ---- reads -----------------------------------------------------
 
@@ -451,7 +479,8 @@ class LakeTable:
     def _write_snap(
         self, rows: DataFrame, seq: int, tag: str, prepartitioned: bool = False
     ) -> dict[str, list[str]]:
-        snap_dir = f"{self.root}/data/snap-{seq:012d}-{tag}"
+        # attempt-unique: a competing writer's overwrite can't reach it
+        snap_dir = f"{self.root}/data/snap-{seq:012d}-{tag}-{uuid.uuid4().hex[:12]}"
         out = rows.withColumn("__bucket", bucket_expr(self.num_buckets))
         # cluster rows by key within each file: repeated repo/path values
         # RLE-compress, the resolve groupBy's map-side combine sees each
@@ -498,36 +527,38 @@ class LakeTable:
         touched: list[int],
         compacted: list[int],
         stats: dict,
+        ranges: dict[str, list[str | None]] | None = None,
     ) -> dict:
         """Build commit ``seq`` on top of ``prev`` — the one place a
         commit dict is made; ``_write_commit`` publishes it.
 
         File stats: every live file keeps the composite key range
-        ``prev`` recorded for it; files this commit wrote get theirs
+        ``prev`` recorded for it, or the one in ``ranges`` (footers the
+        caller already read); other files this commit wrote get theirs
         from their parquet footers (driver-side, O(new files)) —
         _write_snap key-sorts every file, which is what makes
         first/last-row a valid bound.
 
         Ledger: the exactly-once batch-id tail is extended with
         ``batch_id`` and spilled to an immutable side chunk once it
-        exceeds ``ledger_spill_threshold`` (a crash between the chunk
-        write and the commit rename is harmless — a retry rewrites the
-        same deterministic content via tmp + rename)."""
-        prev_stats = prev["file_stats"] if prev else {}
+        exceeds ``ledger_spill_threshold``. The chunk's name is unique
+        to this attempt, so one left by a crash before the commit lands
+        is unreferenced debris that never blocks a retry."""
+        known = {**(prev["file_stats"] if prev else {}), **(ranges or {})}
         live = {p for fl in files.values() for p in fl}
-        file_stats = {p: s for p, s in prev_stats.items() if p in live}
-        file_stats.update(_file_key_ranges(sorted(live - set(prev_stats))))
+        file_stats = {p: s for p, s in known.items() if p in live}
+        file_stats.update(_read_footers(sorted(live - set(known)))[0])
 
         tail = sorted(set(prev["batch_ids"] if prev else []) | {str(batch_id)})
         ledger_files = list(prev["ledger_files"]) if prev else []
         if len(tail) > self.ledger_spill_threshold:
-            chunk_name = f"ledger-{seq:012d}.json"
+            chunk_name = f"ledger-{seq:012d}-{uuid.uuid4().hex[:12]}.json"
             tmp = f"{self.root}/meta/.tmp-ledger-{uuid.uuid4().hex}.json"
             with open(tmp, "w") as f:
                 json.dump({"batch_ids": tail}, f)
                 f.flush()
                 os.fsync(f.fileno())
-            os.rename(tmp, f"{self.root}/meta/{chunk_name}")
+            _publish(tmp, f"{self.root}/meta/{chunk_name}")
             self._ledger_cache[chunk_name] = frozenset(tail)
             ledger_files.append(chunk_name)
             tail = []
@@ -555,19 +586,24 @@ class LakeTable:
         arrive partitioned by bucket, as apply_batch's spread exchange
         leaves it; otherwise each task writes its own file per bucket.
 
-        ``stats_fn``: optional ``callable(touched_buckets, new_files)
-        -> dict`` invoked right after the delta files land and BEFORE
-        the commit JSON is renamed into place — so an Observation attached to
-        ``delta_rows`` has resolved, and ``current_commit()`` still
-        names the PRIOR state (lineage joins against old state read
-        consistently). Its result is the commit's ``stats``."""
+        ``stats_fn``: optional ``callable(rows_per_bucket) -> dict``
+        invoked right after the delta files land, with the row count of
+        each touched bucket's new files (``{"<bucket>": rows}``, read
+        from the footers the commit's file stats need anyway) — so an
+        Observation attached to ``delta_rows`` has resolved. Its result
+        is the commit's ``stats``.
+
+        Raises ``CommitConflict`` when another writer published the
+        same commit first; this attempt's files are then unreferenced."""
         prev = self.current_commit()
         seq = (prev["commit_seq"] + 1) if prev else 0
         files = {k: list(v) for k, v in (prev["files"] if prev else {}).items()}
 
         new_files = self._write_snap(delta_rows, seq, "delta", prepartitioned=True)
         touched = sorted(int(b) for b in new_files)
-        stats = stats_fn(touched, new_files) if stats_fn is not None else {}
+        ranges, rows = _read_footers(sorted(p for fl in new_files.values() for p in fl))
+        rows_per_bucket = {str(b): sum(rows[p] for p in new_files[str(b)]) for b in touched}
+        stats = stats_fn(rows_per_bucket) if stats_fn is not None else {}
         for b, fl in new_files.items():
             files.setdefault(b, []).extend(fl)
 
@@ -592,7 +628,9 @@ class LakeTable:
                 files[str(b)] = compacted.get(str(b), [])
 
         kind = "delta" + ("+compact" if over else "")
-        commit = self._next_commit(prev, seq, batch_id, kind, files, touched, over, stats)
+        commit = self._next_commit(
+            prev, seq, batch_id, kind, files, touched, over, stats, ranges
+        )
         self._write_commit(commit)
         return commit
 
@@ -615,7 +653,7 @@ class LakeTable:
         (their file maps are keyed by THEIR OWN num_buckets; full reads
         resolve identically, only bucket-pruned reads are
         layout-specific). Crash-safe like every write: data files land
-        first, the commit JSON rename is the atomic point; a crash
+        first, the commit JSON link is the atomic point; a crash
         in between leaves an orphan snap dir for vacuum_orphans().
         Single-writer op, like compaction.
 
@@ -633,7 +671,7 @@ class LakeTable:
             )
         old_n = self.num_buckets
         self.num_buckets = new_num_buckets  # _write_snap hashes with it
-        # the restore scope runs through the commit rename: until
+        # the restore scope runs through the commit link: until
         # _write_commit succeeds the committed layout is still old_n,
         # and an instance left on the new count after e.g. an ENOSPC in
         # the ledger-carry write would hash subsequent deltas with a

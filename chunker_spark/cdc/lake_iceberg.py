@@ -117,13 +117,13 @@ class IcebergLakeTable:
         directly.
 
         ``stats_fn`` is called as in ``LakeTable.append_delta`` after
-        the MERGE, with no touched buckets and no new files: Iceberg
-        owns its file layout."""
+        the MERGE, with no per-bucket row counts: Iceberg owns its file
+        layout."""
         from .merge import last_writer_wins
 
         reduced = last_writer_wins(delta_rows, broadcast_winners=False)
         reduced.createOrReplaceTempView("__cdc_delta")
         self.spark.sql(merge_into_sql(self.table))
         self.spark.sql(ledger_insert_sql(self.ledger), args={"batch_id": str(batch_id)})
-        stats = stats_fn([], {}) if stats_fn is not None else {}
+        stats = stats_fn({}) if stats_fn is not None else {}
         return {"batch_id": str(batch_id), "table": self.table, "stats": stats}

@@ -21,12 +21,13 @@ scale:
    append as new bucket-partitioned files (O(batch) write volume);
    readers resolve last-writer-wins per key and compaction keeps
    per-bucket file counts bounded (lake.py).
-6. **Lineage/metrics** (``collect_metrics``) — per-bucket row/byte/
-   chunk counts ride the delta write as an Observation; chunk reuse
-   (skip-on-update) is one more action: one aggregate over the written
-   upserts and the unresolved prior rows of the batch's keys (semi-join
-   pruned), so its cost tracks the batch keys' history, not the touched
-   buckets' data.
+6. **Lineage/metrics** (``collect_metrics``) — row/byte/chunk counts
+   and chunk reuse (skip-on-update) ride the delta write as an
+   Observation: each batch key's prior version (its hashes, read
+   semi-join pruned from the prior commit, content never read) is
+   joined onto the key-partitioned LWW aggregate and rides the winners
+   to the spread exchange, so the write is the commit's one Spark
+   action. Keys per bucket come from the new files' parquet footers.
 """
 
 from __future__ import annotations
@@ -54,45 +55,64 @@ def _estimated_rows(df: DataFrame) -> int | None:
     production streaming path) over a conservative minimum event row
     width, so over-estimating only pushes us to the always-safe shuffle
     path. Returns None when the plan has no statistics (in-memory /
-    mapInPandas sources report a Long.MaxValue sentinel)."""
-    try:
-        stats = df._jdf.queryExecution().optimizedPlan().stats()
-        rc = stats.rowCount()
-        if rc.isDefined():
-            return int(rc.get())  # py4j maps scala BigInt -> python int
-        size = int(stats.sizeInBytes())
-        if size >= 1 << 60:  # defaultSizeInBytes sentinel: no real stats
-            return None
-        return size // 48
-    except Exception:
+    mapInPandas sources report a Long.MaxValue sentinel). Any other
+    failure — a renamed private attribute or JVM method after a PySpark
+    upgrade — propagates: a silent None would send every batch, whatever
+    its size, down the broadcast path."""
+    stats = df._jdf.queryExecution().optimizedPlan().stats()
+    rc = stats.rowCount()
+    if rc.isDefined():
+        return int(rc.get())  # py4j maps scala BigInt -> python int
+    size = int(stats.sizeInBytes())
+    if size >= 1 << 60:  # defaultSizeInBytes sentinel: no real stats
         return None
+    return size // 48
 
 
-def last_writer_wins(events: DataFrame, broadcast_winners: bool = True) -> DataFrame:
+def last_writer_wins(
+    events: DataFrame, broadcast_winners: bool = True, per_key: DataFrame | None = None
+) -> DataFrame:
     """Reduce a batch to its final event per key by max ``seq``.
 
     Default strategy: aggregate only ``(repo, path, max(seq))`` — a few
     bytes per key — then broadcast semi-join the events against the
-    winners. The wide ``content`` column never enters a shuffle here
-    (payload bytes move exactly once per batch, in the spread
-    exchange before the chunking UDF). Requires ``seq`` unique
-    within a batch, which a binlog/WAL offset is by construction.
+    winners (an inner join when ``per_key`` rides along: the winners
+    hold one row per key). The wide ``content`` column never enters a
+    shuffle here (payload bytes move once per batch, in the spread
+    exchange before the chunking UDF). Requires ``seq`` unique within a
+    batch, which a binlog/WAL offset is by construction.
 
     Fallback (``broadcast_winners=False``): single-shuffle
     ``max_by(struct(*), seq)`` grouped by key, for batches whose key
     cardinality is too large for a broadcast (partial map-side combine
     still bounds hot-key cost at O(tasks)).
+
+    ``per_key``: optional columns keyed by (repo, path), at most one row
+    per key, left-joined onto each winner. The join meets the LWW
+    aggregate, which is already partitioned by key, so it adds no
+    exchange of the batch; on the default strategy the columns then
+    ride the winners broadcast.
     """
+
+    def attach(df: DataFrame) -> DataFrame:
+        if per_key is None:
+            return df
+        return df.join(per_key.hint("shuffle_hash"), list(KEY_COLS), "left")
+
     if not broadcast_winners:
-        payload = F.struct(*[F.col(c) for c in events.columns])
-        return (
+        # the key columns stay GROUPING columns in the output, so the
+        # result is known to be partitioned by key (see resolve_state)
+        payload = F.struct(*[F.col(c) for c in events.columns if c not in KEY_COLS])
+        return attach(
             events.groupBy(*KEY_COLS)
             .agg(F.max_by(payload, F.col("seq")).alias("e"))
-            .select("e.*")
+            .select(*[F.col(c if c in KEY_COLS else f"e.{c}").alias(c) for c in events.columns])
         )
     winners = events.groupBy(*KEY_COLS).agg(F.max("seq").alias("seq"))
     return events.join(
-        F.broadcast(winners), on=[*KEY_COLS, "seq"], how="left_semi"
+        F.broadcast(attach(winners)),
+        on=[*KEY_COLS, "seq"],
+        how="left_semi" if per_key is None else "inner",  # inner carries per_key along
     )
 
 
@@ -141,7 +161,6 @@ def apply_batch(
     broadcast default without the count, matching micro-batch reality;
     callers with unbounded stat-less batches pass
     ``broadcast_threshold=0`` to force the always-safe shuffle path."""
-    spark = lake.spark
     if str(batch_id) in lake.committed_batch_ids():
         return None  # exactly-once: duplicate delivery is a no-op
 
@@ -167,115 +186,87 @@ def apply_batch(
     # coalesces to one advisory-sized partition (one file per bucket)
     # while a snapshot-scale batch fans out to at most _SALT_BUCKETS
     # files per bucket, each advisory-sized.
-    # (No cache anywhere: the metrics path reads the just-written delta
-    # files for its reuse count instead of pinning the batch in memory —
-    # caching would also block AQE from re-coalescing the exchange,
-    # InMemoryRelation partitioning is frozen, which fanned a 20-row
-    # batch into one tiny file per (bucket, salt) group when tried.)
-    winners = last_writer_wins(events, broadcast_winners=use_broadcast)
-    batch = with_manifest(_spread(winners, lake.num_buckets), params=params)
-    # merge-on-read delta: upserts keep their seq; deletes become
-    # tombstones. No table read, no join — the MERGE "match" is
-    # resolved lazily by readers (lake.resolve_state) and physically
-    # by amortized compaction. Write volume is O(batch).
-    delta = batch.select(
-        *[F.col(f.name) for f in TABLE_SCHEMA.fields],
-        F.col("seq"),
-        (F.col("op") == "D").alias("deleted"),
+    # (No cache anywhere: caching would block AQE from re-coalescing
+    # the exchange, InMemoryRelation partitioning is frozen, which
+    # fanned a 20-row batch into one tiny file per (bucket, salt) group
+    # when tried.)
+    prior, reuse = None, []
+    if collect_metrics and lake._files_for(lake.current_commit()):
+        # skip-on-update lineage: each key's prior version joins onto
+        # its winner BEFORE the spread, so the reuse count rides the
+        # write below instead of costing an action of its own
+        prior = _prior_versions(lake, events.select(*KEY_COLS), use_broadcast)
+        # every new entry found in the live prior version counts,
+        # repeated hashes included; a tombstoned or absent one reuses
+        # nothing (a null ``old`` drops out of the sum)
+        hit = F.filter("manifest.chunk_sha256", lambda h: F.array_contains("old.h", h))
+        live_prior = ~F.col("deleted") & ~F.col("old.deleted")
+        reuse = [F.sum(F.when(live_prior, F.size(hit))).alias("reused")]
+    winners = last_writer_wins(events, broadcast_winners=use_broadcast, per_key=prior)
+    batch = with_manifest(_spread(winners, lake.num_buckets), params=params).withColumn(
+        "deleted", F.col("op") == "D"
     )
 
     if collect_metrics:
         # The metric sums RIDE the delta write via an Observation
-        # (CollectMetrics): per-bucket counts + conditional volume
-        # sums are collected as a side effect of the one write
-        # action instead of a separate aggregate job (the former
-        # dedicated collect was itself the r4 fix for THREE metric
-        # actions; this removes the remaining one — guide §1.2,
-        # fewer passes). The chunk-reuse count then reads the written
-        # delta files back (column-pruned), never a cached batch.
+        # (CollectMetrics): collected as a side effect of the one write
+        # action instead of a separate aggregate job (guide §1.2, fewer
+        # passes).
         from pyspark.sql import Observation
 
-        nb = lake.num_buckets
         is_up = ~F.col("deleted")
         obs = Observation()
-        delta = delta.observe(
+        batch = batch.observe(
             obs,
             F.count(F.lit(1)).alias("n"),
             F.sum(is_up.cast("long")).alias("up_rows"),
-            F.coalesce(F.sum(F.when(is_up, F.col("size"))), F.lit(0)).alias("up_bytes"),
-            F.coalesce(F.sum(F.when(is_up, F.size("manifest"))), F.lit(0)).alias("up_chunks"),
-            *[
-                F.sum((bucket_expr(nb) == b).cast("long")).alias(f"b{b}")
-                for b in range(nb)
-            ],
+            F.sum(F.when(is_up, F.col("size"))).alias("up_bytes"),
+            F.sum(F.when(is_up, F.size("manifest"))).alias("up_chunks"),
+            *reuse,
         )
 
-        def _finish_stats(touched: list[int], new_files: dict) -> dict:
-            """Runs inside append_delta AFTER the delta files land
-            (observation resolved, touched buckets known) and BEFORE
-            the commit JSON is written — the prior commit still
-            defines the old state for the reuse count. The reuse
-            side reads the JUST-WRITTEN delta files (column-pruned
-            to repo/path/manifest) rather than a cached copy of the
-            batch — same rows by construction, no cache memory, no
-            UDF recompute."""
+        def stats_fn(rows_per_bucket: dict[str, int]) -> dict:
+            """Runs inside append_delta right after the delta files
+            land, so the observation has resolved; the batch is one row
+            per key, so each bucket's new rows are its keys."""
             vals = {k: int(v or 0) for k, v in obs.get.items()}  # empty batch: sums observe as null
-            per_bucket = {b: vals[f"b{b}"] for b in range(nb) if vals[f"b{b}"]}
-            stats = {
+            return {
                 "upsert_rows": vals["up_rows"],
                 "upsert_bytes": vals["up_bytes"],
                 "upsert_chunks": vals["up_chunks"],
                 "delete_rows": vals["n"] - vals["up_rows"],
-                "keys_per_bucket": {str(b): n for b, n in sorted(per_bucket.items())},
+                "keys_per_bucket": rows_per_bucket,
                 "lww_strategy": lww,
+                "reused_chunks": vals.get("reused", 0),  # a first commit reuses nothing
             }
-            # chunk-reuse lineage compares only against prior
-            # versions of THIS batch's keys, so prune the old rows to
-            # them BEFORE the reuse aggregate: a broadcast semi-join
-            # on the key set keeps the metrics path O(batch keys'
-            # history) instead of O(touched buckets' full table
-            # data) — without it the lineage stats re-scan and
-            # re-aggregate ever more table per batch as buckets fill
-            # (measured ~85s/1.6M events extra at local[1] on an
-            # un-pruned read; see BENCH/BASELINE.md r3). A first
-            # commit has no prior files at all: reuse is 0 by
-            # definition, no job launched.
-            new_paths = [p for fl in new_files.values() for p in fl]
-            if new_paths and lake._files_for(lake.current_commit(), touched):
-                from .schema import FILE_SCHEMA
-
-                written = spark.read.schema(FILE_SCHEMA).parquet(*new_paths)
-                # no distinct(): batch is post-LWW, one row per key
-                # by construction — the former distinct was a pure
-                # extra shuffle, and a semi-join build side needs no
-                # dedup anyway
-                batch_keys = written.select(*KEY_COLS)
-                # gate the broadcast on the SAME cardinality decision
-                # the LWW stage made: a >threshold-key batch already
-                # chose the shuffle path precisely because its key
-                # set cannot safely transit the driver —
-                # broadcasting it here would reopen that exact
-                # blowup. Shuffle semi-join in that regime.
-                if use_broadcast:
-                    batch_keys = F.broadcast(batch_keys)
-                old_rows = lake.read_files(buckets=touched).join(
-                    batch_keys, list(KEY_COLS), "left_semi"
-                )
-                stats["reused_chunks"] = _reused_chunks(
-                    written.where(~F.col("deleted")), old_rows
-                )
-            else:
-                stats["reused_chunks"] = 0
-            return stats
-
-        commit = lake.append_delta(delta, str(batch_id), stats_fn=_finish_stats)
     else:
-        # hot path: ONE Spark action per batch — the delta write;
-        # touched buckets are derived from the files it produced
-        commit = lake.append_delta(
-            delta, str(batch_id), stats_fn=lambda _touched, _files: {"lww_strategy": lww}
-        )
-    return commit
+        stats_fn = lambda _rows: {"lww_strategy": lww}  # noqa: E731
+    # merge-on-read delta: upserts keep their seq; deletes become
+    # tombstones. No table read, no join — the MERGE "match" is
+    # resolved lazily by readers (lake.resolve_state) and physically
+    # by amortized compaction. Write volume is O(batch), and the write
+    # is the commit's one Spark action on either path.
+    delta = batch.select(*[F.col(f.name) for f in TABLE_SCHEMA.fields], "seq", "deleted")
+    return lake.append_delta(delta, str(batch_id), stats_fn=stats_fn)
+
+
+def _prior_versions(lake: LakeTable, keys: DataFrame, broadcast: bool) -> DataFrame:
+    """Per batch key, its prior version as ``old`` = (deleted, h): the
+    prior commit's unresolved rows of ``keys`` (semi-join pruned — the
+    build side needs no dedup, so ``keys`` may repeat a key — so the
+    cost tracks the batch keys' history, not the table; only key, seq,
+    deleted and the manifest's hashes are read, never content), resolved
+    by max ``seq``. A key with no prior row is absent. The semi-join
+    follows the LWW tier: a >threshold-key batch chose the shuffle path
+    because its key set cannot transit the driver."""
+    rows = lake.read_files().select(
+        *KEY_COLS, "seq", "deleted", F.col("manifest.chunk_sha256").alias("h")
+    )
+    return (
+        rows.join(F.broadcast(keys) if broadcast else keys, list(KEY_COLS), "left_semi")
+        .groupBy(*KEY_COLS)
+        .agg(F.max_by(F.struct("deleted", "h"), "seq").alias("old"))
+    )
 
 
 def bootstrap_snapshot(
@@ -315,32 +306,3 @@ def bootstrap_snapshot(
     )
     return apply_batch(lake, events, batch_id, params=params, **apply_kwargs)
 
-
-def _reused_chunks(upserts: DataFrame, old_rows: DataFrame) -> int:
-    """Chunk-reuse lineage: how many chunk entries of the batch's
-    upserts already existed in their key's prior LIVE version — the
-    skip-on-update win. ``old_rows`` are the prior files' UNRESOLVED
-    rows of the batch's keys: one grouping over both inputs takes, per
-    key, the new hash array and the max-``seq`` old (deleted, hashes),
-    so resolution and the reuse match share one shuffle. Every new
-    entry counts, repeated hashes included; a tombstoned or absent prior
-    version reuses nothing. One ``count()`` action."""
-    hashes = F.col("manifest.chunk_sha256")
-    no_seq = F.lit(None).cast("long")
-    new = upserts.select(
-        *KEY_COLS, F.col("seq").alias("new_seq"), no_seq.alias("old_seq"),
-        F.lit(False).alias("deleted"), hashes.alias("h"),
-    )
-    old = old_rows.select(
-        *KEY_COLS, no_seq.alias("new_seq"), F.col("seq").alias("old_seq"),
-        "deleted", hashes.alias("h"),
-    )
-    per_key = new.unionByName(old).groupBy(*KEY_COLS).agg(
-        F.max_by("h", "new_seq").alias("new_h"),  # null orderings are skipped
-        F.max_by(F.struct("deleted", "h"), "old_seq").alias("old"),
-    )
-    return int(
-        per_key.where(~F.col("old.deleted"))
-        .select(F.explode(F.filter("new_h", lambda h: F.array_contains("old.h", h))))
-        .count()
-    )

@@ -201,14 +201,14 @@ class IngestStream:
         self.kafka_bootstrap_servers = kafka_bootstrap_servers
         self.kafka_topic = kafka_topic
         self.kafka_options = dict(kafka_options or {})
-        # metrics/lineage rows are the default (production observability)
-        # but cost one extra Spark action per batch: the chunk-reuse
-        # count, one aggregate over the batch's upserts and the prior
-        # rows of its keys (semi-join pruned, so O(batch keys' history),
-        # not O(touched table data)), plus the driver-side metrics
-        # append. Throughput benches and bulk backfills turn this off to
-        # get the documented one-job-per-batch hot path
-        # (merge.apply_batch).
+        # metrics/lineage rows are the default (production observability).
+        # They add no Spark action — the sums and the chunk-reuse count
+        # ride the delta write — but the write's plan grows: the prior
+        # versions of the batch's keys (semi-join pruned, so O(batch
+        # keys' history), not O(touched table data)) are resolved and
+        # joined onto the batch, and the driver appends the metrics
+        # rows. Throughput benches and bulk backfills turn this off for
+        # the plain hot path (merge.apply_batch).
         self.collect_metrics = collect_metrics
         # DLQ scope: Spark restarts micro-batch ids at 0 for every new
         # checkpoint, so keying DLQ dirs by batch id alone would let a

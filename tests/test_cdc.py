@@ -379,7 +379,7 @@ def test_ledger_scale_100k_batches(spark, tmp_path):
 
 
 def test_lake_rejects_uri_root(spark, tmp_path, monkeypatch):
-    """The commit log publishes through os.listdir / open / os.rename,
+    """The commit log publishes through os.listdir / open / os.link,
     so a URI root fails at construction instead of silently becoming a
     local ``s3:/...`` directory that breaks at the first commit."""
     monkeypatch.chdir(tmp_path)
@@ -1226,19 +1226,23 @@ def test_window_count_guards(spark, tmp_path):
     assert store.refresh(lake)["applied"] is False
 
 
-def test_metrics_path_two_actions_and_exact_values(spark, tmp_path, monkeypatch):
-    """Metrics-path driver-action budget (r4 fixed four actions down to
-    two; r6 rides the volume sums on the delta write itself via an
-    Observation): a FIRST commit must cost ZERO driver actions beyond
-    the delta write (no prior state — chunk reuse is 0 by definition),
-    and a follow-up commit exactly ONE (the chunk-reuse join). Counted
-    at the DataFrame API level (collect/count/toPandas), which is
-    deterministic under AQE where job counts are not. Values are
-    checked against an independent driver-side LWW recomputation of
-    the same events."""
+def test_metrics_path_one_action_and_exact_values(spark, tmp_path, monkeypatch):
+    """Metrics-path driver-action budget: the volume sums and the chunk
+    reuse count ride the delta write as an Observation, and keys per
+    bucket come from the new files' footers, so every commit — the first
+    (no prior state) and a follow-up (reuse against the prior version)
+    alike — costs ZERO driver actions beyond the delta write. Counted at
+    the DataFrame API level (collect/count/toPandas), which is
+    deterministic under AQE where job counts are not. Values, keys per
+    bucket included, are checked against an independent driver-side LWW
+    recomputation of the same events and ``key_bucket``."""
+    from collections import Counter
+
     # patch the concrete class — pyspark 4's classic DataFrame overrides
     # the base-class methods, so patching pyspark.sql.DataFrame is a no-op
     from pyspark.sql.classic.dataframe import DataFrame
+
+    from chunker_spark.cdc.lake import key_bucket
 
     events = list(gen_events_local(GenSpec(seed=7, n_keys=40, mean_blocks=3), 240))
     lake = LakeTable(spark, str(tmp_path / "lake"), num_buckets=8)
@@ -1253,11 +1257,10 @@ def test_metrics_path_two_actions_and_exact_values(spark, tmp_path, monkeypatch)
     monkeypatch.setattr(DataFrame, "toPandas", lambda s: (actions.append("toPandas"), orig_topandas(s))[1])
 
     commits = {}
-    expected = {"b0": [], "b1": ["count"]}
     for b, _ in batches:
         n0 = len(actions)
         commits[b] = apply_batch(lake, dfs[b], b, params=PARAMS)
-        assert actions[n0:] == expected[b], f"batch {b}: {actions[n0:]}"
+        assert actions[n0:] == [], f"batch {b}: {actions[n0:]}"
 
     monkeypatch.undo()
 
@@ -1272,71 +1275,156 @@ def test_metrics_path_two_actions_and_exact_values(spark, tmp_path, monkeypatch)
         assert s["upsert_rows"] == len(ups)
         assert s["delete_rows"] == len(win) - len(ups)
         assert s["upsert_bytes"] == sum(len(e["content"]) for e in ups)
-        assert sum(int(v) for v in s["keys_per_bucket"].values()) == len(win)
+        per_bucket = Counter(key_bucket(k, 8) for k in win)
+        assert s["keys_per_bucket"] == {str(b): n for b, n in sorted(per_bucket.items())}
+    assert commits["b0"]["stats"]["reused_chunks"] == 0  # no prior version
     # updated keys share chunks with their prior versions
     assert commits["b1"]["stats"]["reused_chunks"] > 0
 
 
-def test_reused_chunks_matches_resolve_then_semi_join(spark):
-    """The one-aggregate chunk-reuse count equals the two-shuffle
-    formulation it replaced (resolve the old state, then semi-join the
-    exploded new chunks against it) and a driver-side oracle, on data
-    with reuse, keys with several prior versions, tombstoned prior
-    versions (latest and earlier), hashes repeated within one manifest,
-    keys with no prior version and prior rows of keys the batch deletes."""
+def test_reused_chunks_matches_resolve_then_semi_join(spark, tmp_path):
+    """The ``reused_chunks`` a commit records equals the resolve-then-
+    semi-join formulation (resolve the prior state, then semi-join the
+    batch's exploded new chunks against it) and a driver-side oracle, on
+    both LWW tiers (broadcast and shuffle join of the prior versions),
+    on data with reuse, keys with several prior versions, tombstoned
+    prior versions (latest and earlier), hashes repeated within one
+    manifest, keys with no prior version and keys the batch deletes."""
     import random
+    from datetime import datetime, timezone
 
     from chunker_spark.cdc.lake import resolve_state
-    from chunker_spark.cdc.merge import _reused_chunks
 
     rng = random.Random(5)
-    alphabet = [f"h{i:02d}" for i in range(12)]  # small: repeats within a manifest
+    # content is a run of blocks from a small alphabet: content-defined
+    # cuts resync inside repeated blocks, so chunks recur across versions
+    # and within one file
+    blocks = ["".join(rng.choice("abcdefghij \n") for _ in range(700)) for _ in range(6)]
 
-    def manifest():
-        return [rng.choice(alphabet) for _ in range(rng.randrange(1, 9))]
+    def content():
+        return "".join(rng.choice(blocks) for _ in range(rng.randrange(2, 7)))
 
-    old, new = [], []
-    for k in range(80):
+    def event(seq, key, dead):
+        return {
+            "seq": seq, "ts": datetime(2026, 1, 1, tzinfo=timezone.utc), "op": "D" if dead else "U",
+            "repo": key[0], "path": key[1], "commit": f"c{seq}", "lang": None,
+            "language": "py", "branch": "main", "content": None if dead else content(),
+            "schema_ver": 3,
+        }
+
+    prior = [[], [], []]  # one version per key per prior commit: no in-batch LWW collapse
+    final = []
+    for k in range(60):
         key = (f"r{k % 3}", f"p{k}")
-        seqs = sorted(rng.sample(range(1, 1000), rng.randrange(0, 5)))
-        for s in seqs:
-            dead = rng.random() < 0.3
-            old.append((*key, s, dead, None if dead else manifest()))
-        if k % 7 != 6:  # every 7th key: prior rows only (a batch delete)
-            new.append((*key, 2000 + k, False, manifest()))
-    schema = "repo string, path string, seq long, deleted boolean, manifest_h array<string>"
-    as_manifest = F.transform("manifest_h", lambda h: F.struct(h.alias("chunk_sha256")))
+        for c in sorted(rng.sample(range(3), rng.randrange(0, 4))):
+            prior[c].append(event(100 * c + k, key, rng.random() < 0.3))
+        final.append(event(1000 + k, key, k % 7 == 6))  # every 7th key: a batch delete
 
-    def frame(rows, parts):
-        return (
-            spark.createDataFrame(rows, schema)
-            .repartition(parts)  # several versions of a key meet only after the shuffle
-            .select("repo", "path", "seq", "deleted", as_manifest.alias("manifest"))
+    hashes = F.col("manifest.chunk_sha256").alias("h")
+    for tier, threshold in (("broadcast", 1 << 40), ("shuffle", 0)):
+        lake = LakeTable(spark, str(tmp_path / tier), num_buckets=4)
+        for c, ev in enumerate(prior):
+            apply_batch(lake, _events_df(spark, ev), f"p{c}", params=PARAMS)
+        old_rows = lake.read_files()
+        old = old_rows.select("repo", "path", "seq", "deleted", hashes).collect()
+        prev_files = set(lake._files_for(lake.current_commit()))
+        commit = apply_batch(
+            lake, _events_df(spark, final), "final", params=PARAMS, broadcast_threshold=threshold
         )
+        assert commit["stats"]["lww_strategy"] == tier
+        new_paths = sorted(set(lake._files_for(commit)) - prev_files)
+        written = spark.read.schema(old_rows.schema).parquet(*new_paths)
+        upserts = written.where(~F.col("deleted"))
 
-    upserts, old_rows = frame(new, 2), frame(old, 3)
+        def exploded(df):
+            return df.select("repo", "path", F.explode("manifest.chunk_sha256").alias("h"))
 
-    def exploded(df):
-        return df.select("repo", "path", F.explode("manifest.chunk_sha256").alias("h"))
+        reference = exploded(upserts).join(
+            exploded(resolve_state(old_rows)), ["repo", "path", "h"], "left_semi"
+        ).count()
 
-    reference = exploded(upserts).join(
-        exploded(resolve_state(old_rows)), ["repo", "path", "h"], "left_semi"
-    ).count()
+        latest: dict[tuple, tuple] = {}
+        for r in old:
+            if (r.repo, r.path) not in latest or r.seq > latest[(r.repo, r.path)][0]:
+                latest[(r.repo, r.path)] = (r.seq, r.deleted, r.h)
+        new = upserts.select("repo", "path", hashes).collect()
+        oracle = 0
+        for r in new:
+            was = latest.get((r.repo, r.path))
+            if was and not was[1]:
+                oracle += sum(h in was[2] for h in r.h)
 
-    latest: dict[tuple, tuple] = {}
-    for r, p, s, dead, hs in old:
-        if (r, p) not in latest or s > latest[(r, p)][0]:
-            latest[(r, p)] = (s, dead, hs)
-    oracle = 0
-    for r, p, _s, _dead, hs in new:
-        prior = latest.get((r, p))
-        if prior and not prior[1]:
-            oracle += sum(h in prior[2] for h in hs)
+        assert oracle > 0
+        assert any(v[1] for v in latest.values())  # some latest prior is a tombstone
+        assert any(r.deleted for r in old if latest[(r.repo, r.path)][0] != r.seq)  # an earlier one
+        assert len(latest) < len({(e["repo"], e["path"]) for e in final})  # keys with no prior
+        assert any(len(r.h) > len(set(r.h)) for r in new)  # a hash repeats in one manifest
+        assert commit["stats"]["reused_chunks"] == reference == oracle
 
-    assert oracle > 0
-    assert any(v[1] for v in latest.values())  # some latest prior is a tombstone
-    assert any(len(hs) > len(set(hs)) for *_k, hs in new)
-    assert _reused_chunks(upserts, old_rows) == reference == oracle
+
+def test_estimated_rows_fails_loudly(spark, tmp_path, monkeypatch):
+    """The LWW tier reads plan statistics through PySpark's private
+    ``DataFrame._jdf``. If an upgrade renames what it reaches (here: the
+    JVM handle loses ``queryExecution``), apply_batch must raise, not
+    silently pick the broadcast tier for every batch."""
+    events = list(gen_events_local(SPEC, 40))
+    df = _events_df(spark, events)
+    jdf = df._jdf
+
+    class Renamed:
+        def __getattr__(self, name):
+            if name == "queryExecution":
+                raise AttributeError(name)
+            return getattr(jdf, name)
+
+    monkeypatch.setattr(df, "_jdf", Renamed())
+    lake = LakeTable(spark, str(tmp_path / "lake"), num_buckets=2)
+    with pytest.raises(AttributeError, match="queryExecution"):
+        apply_batch(lake, df, "b0", params=PARAMS)
+    assert lake.current_commit() is None
+
+
+def test_two_writers_one_commits_other_conflicts(spark, tmp_path, monkeypatch):
+    """Put-if-absent commits: two LakeTable instances on one root both
+    build commit N. The second to publish gets CommitConflict instead of
+    silently replacing the first's commit — even when its data write
+    lands AFTER the winner committed (its attempt-unique snap directory
+    cannot overwrite the winner's files). The state is the winner's
+    batch, and re-running the loser's batch commits at N+1."""
+    import os
+
+    from chunker_spark.cdc.lake import CommitConflict
+
+    events = list(gen_events_local(SPEC, 160))
+    base, win_ev, lose_ev = events[:60], events[60:110], events[110:160]
+    root = str(tmp_path / "lake")
+    winner = LakeTable(spark, root, num_buckets=4)
+    apply_batch(winner, _events_df(spark, base), "base", params=PARAMS)
+    loser = LakeTable(spark, root, num_buckets=4)
+    n = loser.current_commit()["commit_seq"] + 1
+
+    orig_write = loser._write_snap
+    raced = []
+
+    def write_after_winner_commits(*args, **kwargs):
+        if not raced:  # the winner reads the same prior commit and publishes N
+            raced.append(apply_batch(winner, _events_df(spark, win_ev), "w", params=PARAMS))
+        return orig_write(*args, **kwargs)
+
+    monkeypatch.setattr(loser, "_write_snap", write_after_winner_commits)
+    with pytest.raises(CommitConflict):
+        apply_batch(loser, _events_df(spark, lose_ev), "l", params=PARAMS)
+    monkeypatch.undo()
+
+    assert raced[0]["commit_seq"] == n
+    assert loser.current_commit()["batch_id"] == "w"
+    assert not [f for f in os.listdir(f"{root}/meta") if f.startswith(".tmp-")]
+    _assert_state_equals_oracle(spark, loser, base + win_ev)
+
+    retry = apply_batch(loser, _events_df(spark, lose_ev), "l", params=PARAMS)
+    assert retry["commit_seq"] == n + 1
+    assert loser.committed_batch_ids() == {"base", "w", "l"}
+    _assert_state_equals_oracle(spark, loser, base + win_ev + lose_ev)
 
 
 def test_key_bucket_matches_bucket_expr(spark):
