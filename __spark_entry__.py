@@ -270,7 +270,8 @@ ORDER BY c_custkey
 def q_events_lww(spark, sf):
     """CDC last-writer-wins over the events stream table: the final
     event per user by (ts, event_id) — the engine's batch-reduce step
-    (chunker_spark.cdc.merge.last_writer_wins) on public data."""
+    (chunker_spark.cdc.lake.resolve_state, which merge.apply_batch runs
+    on every batch) on public data."""
     e = _t(spark, sf, "events")
     payload = F.struct("event_id", "event_type", "value")
     return (

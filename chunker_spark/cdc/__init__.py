@@ -1,7 +1,7 @@
 from .events import EVENT_SCHEMA, SOURCE_PARAMS, GenSpec, events_df, gen_events_local, write_segments
 from .lake import LakeTable, bucket_expr
 from .logcompact import compact_log, compaction_stats
-from .merge import apply_batch, last_writer_wins
+from .merge import apply_batch
 from .oracle import replay, state_digest, state_rows
 from .schema import KEY_COLS, TABLE_SCHEMA, normalize_events
 from .streaming import IngestStream
@@ -18,7 +18,6 @@ __all__ = [
     "compact_log",
     "compaction_stats",
     "apply_batch",
-    "last_writer_wins",
     "replay",
     "state_digest",
     "state_rows",

@@ -739,14 +739,28 @@ class LakeTable:
         }
 
     def vacuum_orphans(self) -> dict:
-        """Remove snapshot directories referenced by NO commit — the
-        debris of a writer that crashed after ``_write_snap`` but before
-        ``_write_commit`` (expire_commits won't touch these: it only
-        deletes parquet unreferenced by *retained* commits, and leaves
-        the _SUCCESS/crc debris behind). Single-writer maintenance op:
-        must not run concurrently with an in-flight append, whose
-        not-yet-committed snap dir would look orphaned."""
+        """Remove what a writer that crashed before ``_write_commit``
+        leaves behind: snapshot directories referenced by NO commit
+        (expire_commits won't touch these: it only deletes parquet
+        unreferenced by *retained* commits, and leaves the _SUCCESS/crc
+        debris behind), and spilled ledger chunks the latest commit's
+        ``ledger_files`` does not name (every commit carries its
+        predecessor's chunks forward; an unnamed one was published just
+        before a commit that never landed). Single-writer maintenance
+        op: must not run concurrently with an in-flight append, whose
+        not-yet-committed snap dir and ledger chunk would look
+        orphaned."""
         import shutil
+
+        meta = f"{self.root}/meta"
+        latest = self.current_commit()
+        referenced_chunks = set(latest["ledger_files"] if latest else [])
+        removed_chunks = sorted(
+            f for f in os.listdir(meta)
+            if f.startswith("ledger-") and f.endswith(".json") and f not in referenced_chunks
+        )
+        for name in removed_chunks:
+            os.remove(f"{meta}/{name}")
 
         referenced_dirs = {
             os.path.dirname(p) for p in self._referenced_files(self._commit_files())
@@ -761,4 +775,4 @@ class LakeTable:
                 if not any(ref.startswith(full + "/") for ref in referenced_dirs):
                     shutil.rmtree(full)
                     removed.append(d)
-        return {"removed_dirs": removed}
+        return {"removed_dirs": removed, "removed_ledger_files": removed_chunks}

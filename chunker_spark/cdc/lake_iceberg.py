@@ -47,6 +47,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .lake import resolve_state
 from .schema import KEY_COLS
 
 
@@ -119,9 +120,7 @@ class IcebergLakeTable:
         ``stats_fn`` is called as in ``LakeTable.append_delta`` after
         the MERGE, with no per-bucket row counts: Iceberg owns its file
         layout."""
-        from .merge import last_writer_wins
-
-        reduced = last_writer_wins(delta_rows, broadcast_winners=False)
+        reduced = resolve_state(delta_rows, drop_tombstones=False)
         reduced.createOrReplaceTempView("__cdc_delta")
         self.spark.sql(merge_into_sql(self.table))
         self.spark.sql(ledger_insert_sql(self.ledger), args={"batch_id": str(batch_id)})

@@ -27,8 +27,8 @@ before anything crosses the wire. A log with deep per-key histories
 (the compaction win case) shuffles a tiny fraction of its bytes. No
 driver-side state, no broadcast: full-log key cardinality is unbounded
 by design, so the always-safe shuffle path is the only correct default
-(contrast merge.last_writer_wins, whose broadcast tier exists for
-micro-batches).
+(merge.apply_batch reduces each micro-batch with the same aggregate,
+lake.resolve_state).
 
 Reference parity: the reference repo has no log layer (it chunks one
 buffer); this module is engine-side infrastructure the north rule's

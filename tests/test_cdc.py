@@ -288,25 +288,6 @@ def test_compaction_bounds_files_and_preserves_state(spark, tmp_path):
     _assert_state_equals_oracle(spark, lake, events)
 
 
-def test_lww_strategy_auto_selection(spark, tmp_path):
-    """The LWW strategy cutover is wired: a batch whose estimated rows
-    exceed the threshold takes the single-shuffle max_by path, a small
-    batch takes the broadcast-winners path — and both converge to the
-    same oracle state."""
-    events = list(gen_events_local(SPEC, 120))
-    lake_a = LakeTable(spark, str(tmp_path / "lake_a"), num_buckets=4)
-    c1 = apply_batch(lake_a, _events_df(spark, events), "b0", params=PARAMS,
-                     broadcast_threshold=0)  # force: everything over threshold
-    assert c1["stats"]["lww_strategy"] == "shuffle"
-    _assert_state_equals_oracle(spark, lake_a, events)
-
-    lake_b = LakeTable(spark, str(tmp_path / "lake_b"), num_buckets=4)
-    c2 = apply_batch(lake_b, _events_df(spark, events), "b0", params=PARAMS,
-                     broadcast_threshold=1 << 40)
-    assert c2["stats"]["lww_strategy"] == "broadcast"
-    _assert_state_equals_oracle(spark, lake_b, events)
-
-
 def test_batch_id_ledger_is_o1(spark, tmp_path):
     """committed_batch_ids comes from the latest commit's ledger (O(1)
     file reads per batch), carries every id, and still gates replays."""
@@ -587,16 +568,42 @@ def test_point_lookup_prunes_files_by_footer_stats(spark, tmp_path, kind):
 
 
 def test_vacuum_orphans_removes_crash_debris_only(spark, tmp_path):
+    """vacuum_orphans removes what crashed writers leave and nothing
+    else: a snapshot directory no commit references, and a spilled
+    ledger chunk whose commit never landed (a crash between the chunk
+    publish and the commit publish). The retried batch commits, and its
+    chunk, the committed data and the batch-id ledger survive."""
     import os
 
     events = list(gen_events_local(SPEC, 100))
-    lake = LakeTable(spark, str(tmp_path / "lake"), num_buckets=4)
-    apply_batch(lake, _events_df(spark, events), "v0", params=PARAMS)
+    lake = LakeTable(spark, str(tmp_path / "lake"), num_buckets=4, ledger_spill_threshold=1)
+    apply_batch(lake, _events_df(spark, events[:60]), "v0", params=PARAMS)
+
+    # the second batch spills the ledger tail to a chunk, then crashes
+    # before its commit is published
+    data, meta = f"{lake.root}/data", f"{lake.root}/meta"
+    dirs0, meta0 = set(os.listdir(data)), set(os.listdir(meta))
+    crashes = [OSError("crash before the commit publish")]
+    write_commit = lake._write_commit
+
+    def crash_once(commit):
+        if crashes:
+            raise crashes.pop()
+        write_commit(commit)
+
+    lake._write_commit = crash_once
+    with pytest.raises(OSError, match="crash before the commit publish"):
+        apply_batch(lake, _events_df(spark, events[60:]), "v1", params=PARAMS)
+    crashed_dirs = sorted(set(os.listdir(data)) - dirs0)
+    orphan_chunks = sorted(f for f in set(os.listdir(meta)) - meta0 if f.startswith("ledger-"))
+    assert len(crashed_dirs) == 1 and len(orphan_chunks) == 1
+    retry = apply_batch(lake, _events_df(spark, events[60:]), "v1", params=PARAMS)
+    assert retry["ledger_files"] and orphan_chunks[0] not in retry["ledger_files"]
     before = {(r["repo"], r["path"], r["content_sha256"]) for r in
               lake.read().select("repo", "path", "content_sha256").collect()}
 
     # simulate a crashed writer: snap dir written, commit never recorded
-    orphan = f"{lake.root}/data/snap-000000000099-delta"
+    orphan = f"{data}/snap-000000000099-delta"
     os.makedirs(f"{orphan}/__bucket=0")
     with open(f"{orphan}/__bucket=0/part-orphan.parquet", "w") as f:
         f.write("junk")
@@ -604,12 +611,17 @@ def test_vacuum_orphans_removes_crash_debris_only(spark, tmp_path):
         f.write("")
 
     out = lake.vacuum_orphans()
-    assert out["removed_dirs"] == ["snap-000000000099-delta"]
+    assert out["removed_dirs"] == sorted([*crashed_dirs, "snap-000000000099-delta"])
+    assert out["removed_ledger_files"] == orphan_chunks
     assert not os.path.exists(orphan)
+    assert not os.path.exists(f"{meta}/{orphan_chunks[0]}")
+    assert all(os.path.exists(f"{meta}/{n}") for n in retry["ledger_files"])
+    reopened = LakeTable(spark, lake.root)  # no cached ledger chunks
+    assert reopened.committed_batch_ids() == {"v0", "v1"}
     after = {(r["repo"], r["path"], r["content_sha256"]) for r in
-             lake.read().select("repo", "path", "content_sha256").collect()}
+             reopened.read().select("repo", "path", "content_sha256").collect()}
     assert after == before  # committed data untouched
-    assert lake.vacuum_orphans()["removed_dirs"] == []  # idempotent
+    assert lake.vacuum_orphans() == {"removed_dirs": [], "removed_ledger_files": []}  # idempotent
 
 
 def test_cdf_incrementally_maintains_downstream_aggregate(spark, tmp_path):
@@ -1285,8 +1297,7 @@ def test_metrics_path_one_action_and_exact_values(spark, tmp_path, monkeypatch):
 def test_reused_chunks_matches_resolve_then_semi_join(spark, tmp_path):
     """The ``reused_chunks`` a commit records equals the resolve-then-
     semi-join formulation (resolve the prior state, then semi-join the
-    batch's exploded new chunks against it) and a driver-side oracle, on
-    both LWW tiers (broadcast and shuffle join of the prior versions),
+    batch's exploded new chunks against it) and a driver-side oracle,
     on data with reuse, keys with several prior versions, tombstoned
     prior versions (latest and earlier), hashes repeated within one
     manifest, keys with no prior version and keys the batch deletes."""
@@ -1321,67 +1332,41 @@ def test_reused_chunks_matches_resolve_then_semi_join(spark, tmp_path):
         final.append(event(1000 + k, key, k % 7 == 6))  # every 7th key: a batch delete
 
     hashes = F.col("manifest.chunk_sha256").alias("h")
-    for tier, threshold in (("broadcast", 1 << 40), ("shuffle", 0)):
-        lake = LakeTable(spark, str(tmp_path / tier), num_buckets=4)
-        for c, ev in enumerate(prior):
-            apply_batch(lake, _events_df(spark, ev), f"p{c}", params=PARAMS)
-        old_rows = lake.read_files()
-        old = old_rows.select("repo", "path", "seq", "deleted", hashes).collect()
-        prev_files = set(lake._files_for(lake.current_commit()))
-        commit = apply_batch(
-            lake, _events_df(spark, final), "final", params=PARAMS, broadcast_threshold=threshold
-        )
-        assert commit["stats"]["lww_strategy"] == tier
-        new_paths = sorted(set(lake._files_for(commit)) - prev_files)
-        written = spark.read.schema(old_rows.schema).parquet(*new_paths)
-        upserts = written.where(~F.col("deleted"))
+    lake = LakeTable(spark, str(tmp_path / "lake"), num_buckets=4)
+    for c, ev in enumerate(prior):
+        apply_batch(lake, _events_df(spark, ev), f"p{c}", params=PARAMS)
+    old_rows = lake.read_files()
+    old = old_rows.select("repo", "path", "seq", "deleted", hashes).collect()
+    prev_files = set(lake._files_for(lake.current_commit()))
+    commit = apply_batch(lake, _events_df(spark, final), "final", params=PARAMS)
+    new_paths = sorted(set(lake._files_for(commit)) - prev_files)
+    written = spark.read.schema(old_rows.schema).parquet(*new_paths)
+    upserts = written.where(~F.col("deleted"))
 
-        def exploded(df):
-            return df.select("repo", "path", F.explode("manifest.chunk_sha256").alias("h"))
+    def exploded(df):
+        return df.select("repo", "path", F.explode("manifest.chunk_sha256").alias("h"))
 
-        reference = exploded(upserts).join(
-            exploded(resolve_state(old_rows)), ["repo", "path", "h"], "left_semi"
-        ).count()
+    reference = exploded(upserts).join(
+        exploded(resolve_state(old_rows)), ["repo", "path", "h"], "left_semi"
+    ).count()
 
-        latest: dict[tuple, tuple] = {}
-        for r in old:
-            if (r.repo, r.path) not in latest or r.seq > latest[(r.repo, r.path)][0]:
-                latest[(r.repo, r.path)] = (r.seq, r.deleted, r.h)
-        new = upserts.select("repo", "path", hashes).collect()
-        oracle = 0
-        for r in new:
-            was = latest.get((r.repo, r.path))
-            if was and not was[1]:
-                oracle += sum(h in was[2] for h in r.h)
+    latest: dict[tuple, tuple] = {}
+    for r in old:
+        if (r.repo, r.path) not in latest or r.seq > latest[(r.repo, r.path)][0]:
+            latest[(r.repo, r.path)] = (r.seq, r.deleted, r.h)
+    new = upserts.select("repo", "path", hashes).collect()
+    oracle = 0
+    for r in new:
+        was = latest.get((r.repo, r.path))
+        if was and not was[1]:
+            oracle += sum(h in was[2] for h in r.h)
 
-        assert oracle > 0
-        assert any(v[1] for v in latest.values())  # some latest prior is a tombstone
-        assert any(r.deleted for r in old if latest[(r.repo, r.path)][0] != r.seq)  # an earlier one
-        assert len(latest) < len({(e["repo"], e["path"]) for e in final})  # keys with no prior
-        assert any(len(r.h) > len(set(r.h)) for r in new)  # a hash repeats in one manifest
-        assert commit["stats"]["reused_chunks"] == reference == oracle
-
-
-def test_estimated_rows_fails_loudly(spark, tmp_path, monkeypatch):
-    """The LWW tier reads plan statistics through PySpark's private
-    ``DataFrame._jdf``. If an upgrade renames what it reaches (here: the
-    JVM handle loses ``queryExecution``), apply_batch must raise, not
-    silently pick the broadcast tier for every batch."""
-    events = list(gen_events_local(SPEC, 40))
-    df = _events_df(spark, events)
-    jdf = df._jdf
-
-    class Renamed:
-        def __getattr__(self, name):
-            if name == "queryExecution":
-                raise AttributeError(name)
-            return getattr(jdf, name)
-
-    monkeypatch.setattr(df, "_jdf", Renamed())
-    lake = LakeTable(spark, str(tmp_path / "lake"), num_buckets=2)
-    with pytest.raises(AttributeError, match="queryExecution"):
-        apply_batch(lake, df, "b0", params=PARAMS)
-    assert lake.current_commit() is None
+    assert oracle > 0
+    assert any(v[1] for v in latest.values())  # some latest prior is a tombstone
+    assert any(r.deleted for r in old if latest[(r.repo, r.path)][0] != r.seq)  # an earlier one
+    assert len(latest) < len({(e["repo"], e["path"]) for e in final})  # keys with no prior
+    assert any(len(r.h) > len(set(r.h)) for r in new)  # a hash repeats in one manifest
+    assert commit["stats"]["reused_chunks"] == reference == oracle
 
 
 def test_two_writers_one_commits_other_conflicts(spark, tmp_path, monkeypatch):

@@ -82,24 +82,66 @@ def test_partial_aggregation_and_codegen(spark):
     assert "*(" in executed  # whole-stage-codegen stage markers
 
 
-def test_lww_shuffles_keys_not_content(spark):
-    """Broadcast last-writer-wins: the exchange below the winners
-    aggregate carries (repo, path, seq) only — content bytes reach no
-    shuffle before the salted repartition."""
+def test_apply_batch_lww_is_partial_final_around_one_exchange(spark, tmp_path, monkeypatch):
+    """A hot-path apply_batch batch reduces last-writer-wins with one
+    max_by aggregate planned partial → final around its key exchange:
+    the map-side combine sends a hot key at most one row per input
+    partition to that exchange (the skew bound). The batch crosses
+    exactly two exchanges, that one and _spread, and no broadcast. A key
+    whose versions span several input partitions commits its max-seq
+    version."""
+    import random
+
     import pandas as pd
 
-    from chunker_spark.cdc import EVENT_SCHEMA, GenSpec, gen_events_local, normalize_events
-    from chunker_spark.cdc.merge import last_writer_wins
+    from chunker_spark.cdc import EVENT_SCHEMA, GenSpec, LakeTable, apply_batch, gen_events_local
+    from chunker_spark.kernel import ChunkerParams
 
-    events = list(gen_events_local(GenSpec(seed=3, n_keys=10, mean_blocks=2), 30))
-    pdf = pd.DataFrame(events)[[f.name for f in EVENT_SCHEMA.fields]]
-    df = last_writer_wins(normalize_events(spark.createDataFrame(pdf, EVENT_SCHEMA)))
-    plan = _plan(df)
-    # the only exchange in the plan belongs to the winners agg (3 cols)
-    assert "BroadcastHashJoin" in plan and "LeftSemi" in plan
-    exchanges = [l for l in plan.splitlines() if "hashpartitioning(" in l]
-    assert exchanges, plan  # the winners aggregate must shuffle
-    assert all("content" not in l for l in exchanges)
+    params = ChunkerParams(average_bits=9, min_size=256, max_size=4096)
+    events = list(gen_events_local(GenSpec(seed=3, n_keys=10, mean_blocks=2), 40))
+    base = next(e for e in events if e["op"] != "D")
+    hot = (base["repo"], base["path"])
+    seqs = list(range(1000, 1060))
+    random.Random(1).shuffle(seqs)  # the max-seq version is not the last row
+    batch = [e for e in events if (e["repo"], e["path"]) != hot]
+    for i, seq in enumerate(seqs):  # interleave the hot key's versions through the batch
+        batch.insert(min(2 * i, len(batch)), {**base, "op": "U", "seq": seq, "commit": f"hot-{seq}"})
+    pdf = pd.DataFrame(batch)[[f.name for f in EVENT_SCHEMA.fields]]
+    raw = spark.createDataFrame(pdf, EVENT_SCHEMA)
+    hot_parts = (
+        raw.where((F.col("repo") == hot[0]) & (F.col("path") == hot[1]))
+        .select(F.spark_partition_id()).distinct().count()
+    )
+    assert hot_parts >= 2  # the hot key's versions span input partitions
+
+    lake = LakeTable(spark, str(tmp_path / "lake"), num_buckets=4)
+    deltas = []
+    append_delta = LakeTable.append_delta
+
+    def spy(self, delta_rows, batch_id, stats_fn=None):
+        deltas.append(delta_rows)
+        return append_delta(self, delta_rows, batch_id, stats_fn=stats_fn)
+
+    monkeypatch.setattr(LakeTable, "append_delta", spy)
+    apply_batch(lake, raw, "b0", params=params, collect_metrics=False)
+
+    lines = _plan(deltas[0], "simple").splitlines()
+    plan = "\n".join(lines)
+    assert "Broadcast" not in plan, plan  # no BroadcastExchange, no broadcast join
+    exchanges = [i for i, l in enumerate(lines) if re.search(r"\bExchange ", l)]
+    assert len(exchanges) == 2, plan  # the LWW key exchange and _spread
+    final = [i for i, l in enumerate(lines) if "max_by(" in l and "partial_max_by(" not in l]
+    partial = [i for i, l in enumerate(lines) if "partial_max_by(" in l]
+    assert len(final) == 1 and len(partial) == 1, plan
+    between = [i for i in exchanges if final[0] < i < partial[0]]
+    assert len(between) == 1, plan  # partial → one exchange → final
+    assert re.search(r"hashpartitioning\(repo#\d+, path#\d+", lines[between[0]]), plan
+    # _spread sits above the final aggregate: the winners, not every
+    # version, reach the layout exchange
+    assert min(exchanges) < final[0], plan
+
+    got = lake.read().where((F.col("repo") == hot[0]) & (F.col("path") == hot[1]))
+    assert [r.commit for r in got.select("commit").collect()] == [f"hot-{max(seqs)}"]
 
 
 def test_dedup_exact_shuffle_key_is_fingerprint(spark):
