@@ -178,10 +178,16 @@ class CommitConflict(RuntimeError):
     new commit."""
 
 
-def _publish(tmp: str, final: str) -> None:
-    """Put-if-absent publish of a fully written ``tmp`` file: a hard link
-    fails on an existing ``final`` where ``os.rename`` would silently
-    replace it."""
+def _publish_json(obj, final: str) -> None:
+    """Put-if-absent publish of ``obj`` as JSON at ``final``: written and
+    fsynced under a unique tmp name first, then hard-linked, which fails
+    on an existing ``final`` where ``os.rename`` would silently replace
+    it."""
+    tmp = f"{os.path.dirname(final)}/.tmp-{uuid.uuid4().hex}.json"
+    with open(tmp, "w") as f:
+        json.dump(obj, f)
+        f.flush()
+        os.fsync(f.fileno())
     try:
         os.link(tmp, final)
     except FileExistsError:
@@ -302,15 +308,8 @@ class LakeTable:
         return ids
 
     def _write_commit(self, commit: dict) -> None:
-        seq = commit["commit_seq"]
-        meta = f"{self.root}/meta"
-        tmp = f"{meta}/.tmp-{uuid.uuid4().hex}.json"
-        final = f"{meta}/commit-{seq:012d}.json"
-        with open(tmp, "w") as f:
-            json.dump(commit, f)
-            f.flush()
-            os.fsync(f.fileno())
-        _publish(tmp, final)  # atomic commit point
+        # atomic commit point
+        _publish_json(commit, f"{self.root}/meta/commit-{commit['commit_seq']:012d}.json")
 
     # ---- reads -----------------------------------------------------
 
@@ -553,12 +552,7 @@ class LakeTable:
         ledger_files = list(prev["ledger_files"]) if prev else []
         if len(tail) > self.ledger_spill_threshold:
             chunk_name = f"ledger-{seq:012d}-{uuid.uuid4().hex[:12]}.json"
-            tmp = f"{self.root}/meta/.tmp-ledger-{uuid.uuid4().hex}.json"
-            with open(tmp, "w") as f:
-                json.dump({"batch_ids": tail}, f)
-                f.flush()
-                os.fsync(f.fileno())
-            _publish(tmp, f"{self.root}/meta/{chunk_name}")
+            _publish_json({"batch_ids": tail}, f"{self.root}/meta/{chunk_name}")
             self._ledger_cache[chunk_name] = frozenset(tail)
             ledger_files.append(chunk_name)
             tail = []

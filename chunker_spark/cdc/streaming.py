@@ -14,7 +14,10 @@ JSON — both observable while the stream runs.
 
 from __future__ import annotations
 
+import contextlib
+import glob
 import os
+import shutil
 
 from pyspark.sql import SparkSession
 
@@ -104,8 +107,9 @@ class IngestStream:
         self.params = params
         self.max_files_per_trigger = max_files_per_trigger
         # at production scale micro-batches are bounded by BYTES, not
-        # file count: segment sizes vary, and the LWW/broadcast cutover
-        # and executor memory sizing both key off batch volume
+        # file count: segment sizes vary, and the LWW exchange, the
+        # chunking UDF's Arrow batches and executor memory all scale
+        # with batch volume
         self.max_bytes_per_trigger = max_bytes_per_trigger
         self.fail_after_batches = fail_after_batches
         self.dedup_watermark = dedup_watermark
@@ -216,11 +220,7 @@ class IngestStream:
         # overwrite an earlier one's captured payloads. A stable id
         # derived from the checkpoint path scopes each generation's DLQ
         # subtree; within one generation, redelivery of a batch is an
-        # idempotent overwrite of its own directory. (Lakes with
-        # pre-run-scoping FLAT files directly under <lake>/dlq must
-        # move them into a subdirectory before mixing formats — parquet
-        # partition discovery rejects flat files next to partition
-        # dirs.)
+        # idempotent overwrite of its own directory.
         import hashlib
 
         self.ingest_run_id = hashlib.sha1(
@@ -273,8 +273,6 @@ class IngestStream:
             # so malformed payloads are persisted next to the lake.
             from .envelopes import WIRE_PARSERS, split_malformed
 
-            from pyspark.sql import Observation, functions as F
-
             parser = WIRE_PARSERS[self.wire_format]
             raw = df
             kw = dict(self.parser_kwargs)
@@ -285,31 +283,13 @@ class IngestStream:
 
                 parser = functools.partial(parser, **kw)
             df, dlq = split_malformed(df, parser=parser)
-            # DLQ lands BEFORE the lake commit, in a per-batch
-            # directory with idempotent overwrite: a crash between
-            # the two writes is healed by re-delivery (the lake
-            # commit no-ops but this overwrite re-runs). The old
-            # append-after-commit order lost the payloads forever in
-            # that crash window — redelivery was a ledger no-op, so
-            # the gated append never re-ran.
-            #
-            # ONE job on the wire hot path (was checkpoint + count +
-            # conditional write): the row count rides the write itself
-            # via an Observation, and a clean batch's empty directory
-            # is removed afterwards driver-side — no Spark action —
-            # so the dlq subtree never accumulates per-batch clutter.
-            obs = Observation()
-            dlq_dir = (
-                f"{self.lake.root}/dlq/ingest_run={self.ingest_run_id}"
-                f"/batch_id={batch_id}"
-            )
-            dlq.observe(obs, F.count(F.lit(1)).alias("n")).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(dlq_dir)
-            if not obs.get["n"]:
-                import shutil
-
-                shutil.rmtree(dlq_dir, ignore_errors=True)
+            # DLQ lands BEFORE the lake commit, in a per-batch leaf with
+            # idempotent overwrite: a crash between the two writes is
+            # healed by re-delivery (the lake commit no-ops but this
+            # overwrite re-runs). The old append-after-commit order lost
+            # the payloads forever in that crash window — redelivery was
+            # a ledger no-op, so the gated append never re-ran.
+            _quarantine(dlq, self._leaf("dlq", batch_id))
             if self.txn_atomic:
                 # atomic release: hold back events of transactions whose
                 # commit line this log prefix has not reached; released
@@ -329,10 +309,7 @@ class IngestStream:
             collect_metrics=self.collect_metrics,
         )
         if self.toast_value_cols:
-            qdir = (
-                f"{self.lake.root}/dlq/toast/ingest_run={self.ingest_run_id}"
-                f"/batch_id={batch_id}"
-            )
+            qdir = self._leaf("dlq/toast", batch_id)
             if os.path.isdir(qdir):
                 # the batch (its deletes included) is now in the ledger —
                 # mark the quarantine leaf merge-complete. ADVICE r4: a
@@ -373,34 +350,19 @@ class IngestStream:
             # the fence segment is batch-local bookkeeping — by replay
             # time this batch (deletes included) has merged, so writing
             # it to the quarantine would wrongly re-fence the replay
-            quarantine = df.where(F.col("toast_unresolved") > 0).drop("_toast_seg")
-            qdir = (
-                f"{self.lake.root}/dlq/toast/ingest_run={self.ingest_run_id}"
-                f"/batch_id={batch_id}"
+            _quarantine(
+                df.where(F.col("toast_unresolved") > 0).drop("_toast_seg"),
+                self._leaf("dlq/toast", batch_id),
             )
-            from pyspark.sql import Observation
-
-            obs = Observation()
-            quarantine.observe(obs, F.count(F.lit(1)).alias("n")).coalesce(
-                1
-            ).write.mode("overwrite").parquet(qdir)
-            if not obs.get["n"]:
-                import shutil
-
-                shutil.rmtree(qdir, ignore_errors=True)
-                try:
-                    # an all-resolved run leaves an EMPTY ingest_run=
-                    # parent otherwise, which a later quarantine replay
-                    # cannot read as parquet; rmdir only succeeds once
-                    # the last batch leaf is gone, which is exactly the
-                    # condition for removing it
-                    os.rmdir(os.path.dirname(qdir))
-                except OSError:
-                    pass
             df = df.where(F.col("toast_unresolved") == 0)
         return df.drop(
             "toast_unresolved", "_toast_seg", *[f"_toast_un_{c}" for c in cols]
         )
+
+    def _leaf(self, sub: str, batch_id: int) -> str:
+        """This generation's quarantine leaf for ``batch_id`` under
+        ``<lake>/<sub>`` (``dlq`` or ``dlq/toast``)."""
+        return f"{self.lake.root}/{sub}/ingest_run={self.ingest_run_id}/batch_id={batch_id}"
 
     def _build_stream(self):
         os.makedirs(self.checkpoint_dir, exist_ok=True)
@@ -587,11 +549,114 @@ def windowed_event_metrics(events, window: str = "1 minute", watermark: str = "1
     )
 
 
+def _quarantine(rows, leaf: str) -> int:
+    """Overwrite the quarantine ``leaf`` with ``rows`` and return their
+    count: ONE job, the count riding the write as an Observation.
+
+    Every quarantine write goes through here: the ingest path's DLQ and
+    TOAST leaves (written BEFORE the lake commit, so redelivery re-runs
+    the overwrite after a crash) and a replay's survivors (written
+    BEFORE its sources are removed). An empty leaf is removed
+    driver-side, and with it its ``ingest_run=`` directory once no leaf
+    is left there (``rmdir`` fails on a non-empty one), so a clean
+    stream leaves no directory behind."""
+    from pyspark.sql import Observation, functions as F
+
+    obs = Observation()
+    rows.observe(obs, F.count(F.lit(1)).alias("n")).coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(leaf)
+    n = int(obs.get["n"])
+    if not n:
+        shutil.rmtree(leaf, ignore_errors=True)
+        with contextlib.suppress(OSError):
+            os.rmdir(os.path.dirname(leaf))
+    return n
+
+
+def _quarantine_leaves(root: str) -> list[str]:
+    """The ``ingest_run=*/batch_id=*`` leaves under ``root`` that hold
+    parquet. Empty leaves and ``ingest_run=`` shells (a crash can leave
+    either) are pruned on the way: reading one would raise 'Unable to
+    infer schema' instead of the replay's no-op."""
+    base = glob.escape(root)
+    leaves = []
+    for leaf in sorted(glob.glob(f"{base}/ingest_run=*/batch_id=*")):
+        if glob.glob(f"{glob.escape(leaf)}/*.parquet"):
+            leaves.append(leaf)
+        else:
+            shutil.rmtree(leaf, ignore_errors=True)
+    for run in glob.glob(f"{base}/ingest_run=*"):
+        with contextlib.suppress(OSError):
+            os.rmdir(run)
+    return leaves
+
+
+def _replay(
+    lake: LakeTable,
+    root: str,
+    leaves: list[str],
+    kind: str,
+    split,
+    params: ChunkerParams,
+    apply_kwargs: dict,
+    event_transform=None,
+    mark_merged: bool = False,
+) -> dict:
+    """The one replay body behind ``replay_dlq`` and
+    ``replay_toast_quarantine``: re-ingest the quarantine ``leaves``
+    under ``root`` after ``split(rows) -> (merge, still_bad)``.
+
+    * ONE scan of the leaves: everything downstream (split, digest,
+      merge, survivor write) reads the checkpointed blocks, so the
+      survivor write may overwrite one of its own source leaves
+      (consecutive replays over an unchanged still-bad set pick the
+      same survivor leaf; without the checkpoint, the overwrite would
+      delete the files mid-read).
+    * ``merge`` commits as ONE batch only when it has rows; its id is a
+      distributed order-insensitive digest of its content, so a crash
+      between commit and cleanup — or a second run — is a ledger no-op.
+    * ``still_bad`` is re-quarantined under ``ingest_run=replay-<id>``
+      BEFORE the sources are removed: a crash in between leaves
+      duplicates, never a loss (a half-cleaned set re-applies rows
+      (key, seq)-identical to the committed ones, which the max-seq
+      MERGE resolves to the same state).
+    """
+    from pyspark.sql import functions as F
+
+    from ..functions.digests import content_digest
+
+    if not leaves:
+        return {"replayed": 0, "still_bad": 0, "batch_id": None, "commit": None}
+    merge, still_bad = split(lake.spark.read.parquet(*leaves).localCheckpoint(eager=True))
+    stats = merge.agg(
+        F.count(F.lit(1)).alias("n"),
+        content_digest(F.to_json(F.struct(*merge.columns))).alias("dig"),
+    ).collect()[0]
+    n_ok = int(stats["n"])
+    batch_id = commit = None
+    if n_ok:
+        batch_id = f"{kind}-replay-{int(stats['dig']) % (1 << 64):016x}"
+        if event_transform is not None:
+            merge = event_transform(merge)
+        commit = apply_batch(lake, merge, batch_id, params=params, **apply_kwargs)
+    survivor = os.path.join(root, f"ingest_run=replay-{(batch_id or 'none')[-16:]}", "batch_id=0")
+    n_bad = _quarantine(still_bad, survivor)
+    if n_bad and mark_merged:
+        open(os.path.join(survivor, "_MERGED"), "w").close()
+    for leaf in leaves:
+        if n_bad and os.path.abspath(leaf) == os.path.abspath(survivor):
+            continue  # the just-written survivors: never remove
+        shutil.rmtree(leaf, ignore_errors=True)
+        with contextlib.suppress(OSError):
+            os.rmdir(os.path.dirname(leaf))  # the run dir, once its last leaf is gone
+    return {"replayed": n_ok, "still_bad": n_bad, "batch_id": batch_id, "commit": commit}
+
+
 def replay_dlq(
     lake: LakeTable,
     wire_format: str,
     params: ChunkerParams = SOURCE_PARAMS,
-    dlq_root: str | None = None,
     **apply_kwargs,
 ) -> dict:
     """Re-ingest dead-lettered payloads after a producer/parser fix.
@@ -600,86 +665,26 @@ def replay_dlq(
     ``<lake>/dlq/ingest_run=*/batch_id=*`` with their original payload
     byte-for-byte. Once the upstream defect is fixed (producer patched,
     or this engine's parser extended), this replays the whole quarantine
-    through the same parse → split → exactly-once MERGE path:
-
-    * rows that now parse commit as ONE batch whose id is derived from
-      the payload content (sha256 over the sorted payload set), so a
-      crash between commit and cleanup — or an operator running the
-      replay twice — is a ledger no-op, never a double-apply;
-    * rows that still fail re-quarantine under a fresh
-      ``ingest_run=replay-<id>`` directory BEFORE the old directories
-      are removed, so no payload is ever dropped by a replay.
+    through the same parse → split → exactly-once MERGE path
+    (``_replay``): the payloads that now parse commit as ONE
+    content-addressed batch, and the ones that still fail are
+    re-quarantined before the old leaves are removed, so no payload is
+    ever dropped by a replay.
 
     Returns {"replayed": n, "still_bad": m, "batch_id": ..., "commit":
-    commit-dict-or-None}. No-op ({"replayed": 0, ...}) when the
-    quarantine is empty.
+    commit-dict-or-None}; ``batch_id`` and ``commit`` are None when
+    nothing parses. No-op ({"replayed": 0, ...}) when the quarantine is
+    empty.
     """
-    import shutil
-
-    from pyspark.sql import functions as F
-
     from .envelopes import WIRE_PARSERS, split_malformed
 
     parser = WIRE_PARSERS[wire_format]
-    spark = lake.spark
-    root = dlq_root or f"{lake.root}/dlq"
-    if not os.path.isdir(root):
-        return {"replayed": 0, "still_bad": 0, "batch_id": None, "commit": None}
-    run_dirs = sorted(
-        d for d in os.listdir(root)
-        if d.startswith("ingest_run=") and os.path.isdir(os.path.join(root, d))
+    root = f"{lake.root}/dlq"
+    return _replay(
+        lake, root, _quarantine_leaves(root), "dlq",
+        lambda rows: split_malformed(rows, parser=parser),
+        params, apply_kwargs,
     )
-    if not run_dirs:
-        return {"replayed": 0, "still_bad": 0, "batch_id": None, "commit": None}
-    # ONE scan of the quarantine: everything downstream (digest,
-    # parse/split, merge, re-quarantine write) reads the checkpointed
-    # blocks, and — critically — the re-quarantine write can safely
-    # target a directory that was among the SOURCE dirs (consecutive
-    # replays over an unchanged still-bad set produce the same digest
-    # and hence the same replay dir name; without the checkpoint,
-    # overwrite would delete the files mid-read).
-    raw = (
-        spark.read.parquet(*[os.path.join(root, d) for d in run_dirs])
-        .select("value")
-        .localCheckpoint(eager=True)
-    )
-    # content-derived batch id: stable across retries AND across runs
-    # that quarantine the same payloads — the idempotency key is the
-    # data, not the wall clock. Computed DISTRIBUTED (never collecting
-    # payloads to the driver) via the shared order-insensitive digest.
-    from ..functions.digests import content_digest
-
-    stats = raw.agg(
-        F.count(F.lit(1)).alias("n"), content_digest("value").alias("dig")
-    ).collect()[0]
-    total = int(stats["n"])
-    if total == 0:
-        return {"replayed": 0, "still_bad": 0, "batch_id": None, "commit": None}
-    batch_id = f"dlq-replay-{int(stats['dig']) % (1 << 64):016x}"
-    clean, still_bad = split_malformed(raw, parser=parser)
-    commit = apply_batch(lake, clean, batch_id, params=params, **apply_kwargs)
-    # quarantine survivors under a replay run BEFORE removing the old
-    # directories — a crash anywhere in between leaves duplicates,
-    # never a loss: an identical leftover set replays as a ledger
-    # no-op (same content digest), and a half-cleaned set re-applies
-    # rows that are (key, seq)-identical to the committed ones, which
-    # the max-seq MERGE resolves to the same final state
-    n_bad = still_bad.count()
-    replay_dir = f"ingest_run=replay-{batch_id[-16:]}"
-    if n_bad:
-        still_bad.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(root, replay_dir, "batch_id=0")
-        )
-    for d in run_dirs:
-        if n_bad and d == replay_dir:
-            continue  # the just-written survivors: never remove
-        shutil.rmtree(os.path.join(root, d), ignore_errors=True)
-    return {
-        "replayed": total - n_bad,
-        "still_bad": n_bad,
-        "batch_id": batch_id,
-        "commit": commit,
-    }
 
 
 def _toast_state_resolve(lake, frame, keys, value_cols, old_prefix):
@@ -769,121 +774,63 @@ def replay_toast_quarantine(
     version had not reached the lake yet — out-of-order topics, a
     backfill racing the tail). Once the missing versions land, this
     replays the quarantine through the same state fill and commits the
-    now-resolved rows as ONE content-addressed batch (ledger no-op on
-    retry, same crash-safety dance as ``replay_dlq``: survivors are
-    re-quarantined BEFORE the old directories are removed). Pass the
-    same ``event_transform`` the stream uses (e.g. the rename split) —
-    quarantined rows were diverted before it ran.
+    now-resolved rows as ONE content-addressed batch, through the same
+    replay path as ``replay_dlq`` (``_replay``: ledger no-op on retry,
+    survivors re-quarantined BEFORE the old leaves are removed). Pass
+    the same ``event_transform`` the stream uses (e.g. the rename
+    split) — quarantined rows were diverted before it ran.
 
     Returns {"replayed": n, "still_bad": m, "batch_id": ..., "commit":
     commit-dict-or-None}.
     """
-    import shutil
+    import warnings
 
     from pyspark.sql import functions as F
 
     from .schema import KEY_COLS
 
-    spark = lake.spark
     root = f"{lake.root}/dlq/toast"
-    if not os.path.isdir(root):
-        return {"replayed": 0, "still_bad": 0, "batch_id": None, "commit": None}
-    run_dirs = sorted(
-        d for d in os.listdir(root)
-        if d.startswith("ingest_run=") and os.path.isdir(os.path.join(root, d))
-    )
-    # collect parquet LEAF dirs (batch_id=*), pruning empty shells (an
-    # all-resolved stream can leave an empty ingest_run= husk behind;
-    # reading one would raise 'Unable to infer schema' instead of the
-    # documented no-op). Eligibility gate (ADVICE r4): a leaf is
-    # replayable only once its source batch has merged — the _MERGED
-    # marker the stream writes after the lake commit, or ledger
-    # membership for leaves predating the marker. An unmarked,
-    # uncommitted leaf means the stream crashed between the quarantine
-    # write and the commit; filling it from CURRENT state could
-    # resurrect a deleted incarnation, so it is skipped (with a
-    # warning) until the batch's redelivery rewrites and marks it.
+    # Eligibility gate (ADVICE r4): a leaf is replayable only once its
+    # source batch has merged — the _MERGED marker the stream writes
+    # after the lake commit, or ledger membership for leaves predating
+    # the marker. An unmarked, uncommitted leaf means the stream crashed
+    # between the quarantine write and the commit; filling it from
+    # CURRENT state could resurrect a deleted incarnation, so it is
+    # skipped (with a warning) until the batch's redelivery rewrites and
+    # marks it.
     committed = lake.committed_batch_ids()
-    live_leaves: list[str] = []
-    pending: list[str] = []
-    for d in run_dirs:
-        full = os.path.join(root, d)
-        kept_any = False
-        for b in sorted(os.listdir(full)):
-            leaf = os.path.join(full, b)
-            if not (b.startswith("batch_id=") and os.path.isdir(leaf)):
-                continue
-            if not any(f.endswith(".parquet") for f in os.listdir(leaf)):
-                shutil.rmtree(leaf, ignore_errors=True)
-                continue
-            merged = os.path.exists(os.path.join(leaf, "_MERGED"))
-            if not merged and b.split("=", 1)[1] not in committed:
-                pending.append(leaf)
-                kept_any = True
-                continue
-            live_leaves.append(leaf)
-            kept_any = True
-        if not kept_any:
-            shutil.rmtree(full, ignore_errors=True)
+    ready, pending = [], []
+    for leaf in _quarantine_leaves(root):
+        merged = os.path.exists(os.path.join(leaf, "_MERGED"))
+        if merged or os.path.basename(leaf).split("=", 1)[1] in committed:
+            ready.append(leaf)
+        else:
+            pending.append(leaf)
     if pending:
-        import warnings
-
         warnings.warn(
             f"replay_toast_quarantine: skipped {len(pending)} quarantine "
             f"leaf dir(s) whose source batch has not committed (stream "
             f"crashed mid-batch?) — restart the stream so redelivery "
             f"merges them first: {pending[:3]}"
         )
-    if not live_leaves:
-        return {"replayed": 0, "still_bad": 0, "batch_id": None, "commit": None}
-    # leaf paths are read directly, so the batch_id= path component is
-    # not discovered as a column; the drop below also sheds a literal
-    # batch_id column or _toast_seg from older quarantine layouts (the
-    # fence is batch-local and meaningless once the batch has merged)
-    rows = (
-        spark.read.parquet(*live_leaves)
-        .drop("batch_id", "_toast_seg")
-        .localCheckpoint(eager=True)
-    )
-
     keys = list(KEY_COLS)
-    old = "old_" if all(f"old_{k}" in rows.columns for k in keys) else None
-    rows, _ = _toast_state_resolve(lake, rows, keys, value_cols, old)
-    resolved = rows.where(F.col("toast_unresolved") == 0).drop(
-        "toast_unresolved", *[f"_toast_un_{c}" for c in value_cols]
+    marks = ["toast_unresolved", *[f"_toast_un_{c}" for c in value_cols]]
+
+    def split(rows):
+        # leaf paths are read directly, so the batch_id= path component
+        # is not discovered as a column; the drop sheds a literal
+        # batch_id column or _toast_seg from older quarantine layouts
+        # (the fence is batch-local and meaningless once the batch has
+        # merged)
+        rows = rows.drop("batch_id", "_toast_seg")
+        old = "old_" if all(f"old_{k}" in rows.columns for k in keys) else None
+        rows, _ = _toast_state_resolve(lake, rows, keys, value_cols, old)
+        unresolved = F.col("toast_unresolved") > 0
+        return rows.where(~unresolved).drop(*marks), rows.where(unresolved)
+
+    # survivors descend from merged batches by construction, so they
+    # are marked merged
+    return _replay(
+        lake, root, ready, "toast", split, params, apply_kwargs,
+        event_transform=event_transform, mark_merged=True,
     )
-    still_bad = rows.where(F.col("toast_unresolved") > 0)
-
-    from ..functions.digests import content_digest
-
-    stats = resolved.agg(
-        F.count(F.lit(1)).alias("n"),
-        content_digest(F.to_json(F.struct(*resolved.columns))).alias("dig"),
-    ).collect()[0]
-    n_ok = int(stats["n"])
-    commit = None
-    batch_id = None
-    if n_ok:
-        batch_id = f"toast-replay-{int(stats['dig']) % (1 << 64):016x}"
-        if event_transform is not None:
-            resolved = event_transform(resolved)
-        commit = apply_batch(lake, resolved, batch_id, params=params, **apply_kwargs)
-
-    n_bad = still_bad.count()
-    replay_dir = f"ingest_run=replay-{(batch_id or 'none')[-16:]}"
-    survivor = os.path.join(root, replay_dir, "batch_id=0") if n_bad else None
-    if n_bad:
-        still_bad.coalesce(1).write.mode("overwrite").parquet(survivor)
-        # survivors descend from merged batches by construction
-        open(os.path.join(survivor, "_MERGED"), "w").close()
-    for leaf in live_leaves:
-        if survivor and os.path.abspath(leaf) == os.path.abspath(survivor):
-            continue
-        shutil.rmtree(leaf, ignore_errors=True)
-        try:
-            # removes the ingest_run= parent only once its last leaf is
-            # gone — pending (skipped) leaves keep it alive
-            os.rmdir(os.path.dirname(leaf))
-        except OSError:
-            pass
-    return {"replayed": n_ok, "still_bad": n_bad, "batch_id": batch_id, "commit": commit}

@@ -538,6 +538,8 @@ def test_dlq_survives_new_stream_generation(spark, tmp_path):
     checkpoint path): a later run against the same lake with a fresh
     checkpoint must not overwrite an earlier run's captured payloads,
     while redelivery WITHIN a generation stays an idempotent overwrite."""
+    import glob
+
     from chunker_spark.cdc import LakeTable
     from chunker_spark.cdc.streaming import IngestStream
     from chunker_spark.kernel import ChunkerParams
@@ -565,6 +567,16 @@ def test_dlq_survives_new_stream_generation(spark, tmp_path):
     dlq = spark.read.parquet(f"{lake.root}/dlq")
     assert dlq.count() == 2  # generation 1's payload NOT clobbered
     assert dlq.select("ingest_run").distinct().count() == 2
+
+    # an all-clean generation quarantines nothing and leaves no
+    # ingest_run= directory behind
+    log3 = tmp_path / "log3"
+    log3.mkdir()
+    (log3 / "seg-0.jsonl").write_text(_dbz("c", 3, path="c.py", content="v3\n") + "\n")
+    IngestStream(spark, lake, str(log3), str(tmp_path / "ckpt3"),
+                 params=params, wire_format="debezium").run_available()
+    assert len(glob.glob(f"{lake.root}/dlq/ingest_run=*")) == 2
+    assert spark.read.parquet(f"{lake.root}/dlq").count() == 2
 
 
 def test_sessionize_split_keeps_null_rows(spark):

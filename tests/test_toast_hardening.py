@@ -161,17 +161,23 @@ def test_redelivered_rename_placeholder_resolves_via_new_key(spark, tmp_path):
     assert not glob.glob(f"{lake.root}/dlq/toast/ingest_run=*")
 
 
-def test_replay_noop_on_empty_run_dirs(spark, tmp_path):
-    """Empty ingest_run= shells (however they arise) are pruned by the
-    replay, which returns its documented no-op instead of failing on
-    schema inference."""
-    from chunker_spark.cdc import LakeTable
-    from chunker_spark.cdc.streaming import replay_toast_quarantine
+@pytest.mark.parametrize(
+    "replay, shell",
+    [("replay_dlq", "dlq/ingest_run=stale"),
+     ("replay_toast_quarantine", "dlq/toast/ingest_run=stale")],
+    ids=["dlq", "toast"],
+)
+def test_replay_noop_on_empty_run_dirs(spark, tmp_path, replay, shell):
+    """Empty ingest_run= shells (however they arise) are pruned by
+    either replay, which returns its documented no-op instead of
+    failing on schema inference."""
+    from chunker_spark.cdc import LakeTable, streaming
 
     lake = LakeTable(spark, str(tmp_path / "lake"), num_buckets=2)
-    shell = f"{lake.root}/dlq/toast/ingest_run=stale"
+    shell = f"{lake.root}/{shell}"
     os.makedirs(shell)
-    res = replay_toast_quarantine(lake, ["content"])
+    arg = "debezium" if replay == "replay_dlq" else ["content"]
+    res = getattr(streaming, replay)(lake, arg)
     assert res == {"replayed": 0, "still_bad": 0, "batch_id": None, "commit": None}
     assert not os.path.isdir(shell)  # pruned, not left to trip the next call
 
