@@ -2,14 +2,14 @@
 
 Real Debezium/Maxwell streams arrive on a Kafka topic, not as JSON-lines
 files; the file tail in streaming.py is the in-sandbox stand-in (this
-container has no Kafka connector jar and no network). Mirroring the
-Iceberg seam (lake_iceberg.py): everything that can be exercised without
-a broker IS — option wiring (``kafka_reader_options``), the
-value-column contract that bridges Kafka's wire schema to the envelope
-parsers (``kafka_value_lines``, testable on a batch DataFrame with the
-same schema), and the construction guard — while ``build_kafka_stream``
-raises unless the ``spark-sql-kafka-0-10`` connector is actually on the
-classpath. See docs/deploy_seams.md for the jar-present run recipe.
+container has no Kafka connector jar and no network). Everything that
+can be exercised without a broker IS — option wiring
+(``kafka_reader_options``), the value-column contract that bridges
+Kafka's wire schema to the envelope parsers (``kafka_value_lines``,
+testable on a batch DataFrame with the same schema), and the
+construction guard — while ``build_kafka_stream`` raises unless the
+``spark-sql-kafka-0-10`` connector is actually on the classpath. See
+docs/deploy_seams.md for the jar-present run recipe.
 
 Semantics at scale: the Kafka source's offsets live in the SAME
 checkpoint WAL as the file source's, so the exactly-once story is

@@ -13,11 +13,17 @@ Usage: python examples/cdc_pipeline.py [n_events] [workdir]
 
 from __future__ import annotations
 
+import os
 import shutil
 import sys
 import tempfile
 
-sys.path.insert(0, __file__.rsplit("/", 2)[0])
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+# Spark's Python workers import chunker_spark too; they inherit PYTHONPATH.
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+)
 
 from pyspark.sql import SparkSession, functions as F
 

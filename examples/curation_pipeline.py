@@ -20,9 +20,15 @@ Usage: python examples/curation_pipeline.py [sf_dir]
 from __future__ import annotations
 
 import json
+import os
 import sys
 
-sys.path.insert(0, __file__.rsplit("/", 2)[0])
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+# Spark's Python workers import chunker_spark too; they inherit PYTHONPATH.
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+)
 
 from pyspark.sql import SparkSession, functions as F
 

@@ -1,5 +1,6 @@
-"""Smoke tests of the runnable examples, each run the way its docstring
-says: as a script, from the repo root."""
+"""Smoke tests of the runnable examples, each run as a script by its
+absolute path from a directory outside the repo, so the Spark workers
+must find chunker_spark through the example's own path setup."""
 
 import os
 import subprocess
@@ -13,8 +14,8 @@ def test_day2_hygiene_example_runs(tmp_path):
     and quarantine writer, drift repair and ``rebucket`` end to end in
     its own Spark session; it exits 0 and ends on its OK line."""
     r = subprocess.run(
-        [sys.executable, "examples/day2_hygiene.py"],
-        cwd=ROOT, capture_output=True, text=True, timeout=600,
+        [sys.executable, os.path.join(ROOT, "examples", "day2_hygiene.py")],
+        cwd=tmp_path, capture_output=True, text=True, timeout=600,
         env={**os.environ, "TMPDIR": str(tmp_path), "PYTHONIOENCODING": "utf-8"},
     )
     assert r.returncode == 0, r.stderr[-2000:]

@@ -1,8 +1,7 @@
 """Kafka source seam (cdc/source_kafka.py): everything provable without
 a broker/connector jar — option wiring, the value-column contract that
 bridges Kafka's wire schema to the envelope parsers, and the
-construction guard. Mirrors the Iceberg seam's jar-less test strategy
-(test_cdc.py's lake_iceberg coverage)."""
+construction guard."""
 
 from __future__ import annotations
 

@@ -227,47 +227,6 @@ def test_embedding_near_dup(spark):
     assert (0, 1) in lsh and lsh <= exact
 
 
-def test_iceberg_seam_guarded(spark):
-    import pytest as _pytest
-
-    from chunker_spark.cdc.lake_iceberg import IcebergLakeTable, iceberg_available
-
-    if iceberg_available(spark):
-        _pytest.skip("iceberg present: seam active")
-    with _pytest.raises(RuntimeError, match="merge-on-read"):
-        IcebergLakeTable(spark, "lake.files")
-
-
-def test_iceberg_append_delta_matches_lake_signature():
-    """Callers hold either sink through the same append_delta call."""
-    import inspect
-
-    from chunker_spark.cdc.lake import LakeTable
-    from chunker_spark.cdc.lake_iceberg import IcebergLakeTable
-
-    params = lambda cls: list(inspect.signature(cls.append_delta).parameters)
-    assert params(IcebergLakeTable) == params(LakeTable)
-
-
-def test_iceberg_sql_contract_pinned():
-    """The generated SQL is testable without the Iceberg jar: the MERGE
-    must be seq-fenced (strictly-greater match guard — equal/lower seqs
-    are no-ops, the idempotency hinge) and insert unmatched rows; the
-    ledger append must use a :batch_id parameter, never interpolate the
-    data-driven id into the SQL text."""
-    from chunker_spark.cdc.lake_iceberg import ledger_insert_sql, merge_into_sql
-
-    m = merge_into_sql("lake.files")
-    assert "MERGE INTO lake.files t" in m
-    assert "t.repo = s.repo AND t.path = s.path" in m
-    assert "WHEN MATCHED AND s.seq > t.seq THEN UPDATE SET *" in m
-    assert "WHEN NOT MATCHED THEN INSERT *" in m
-    assert "DELETE" not in m  # tombstones are flagged rows, never MERGE deletes
-
-    ins = ledger_insert_sql("lake.files_commits")
-    assert ":batch_id" in ins and "'" not in ins
-
-
 def test_lsh_ann_recall_vs_brute_force(spark):
     """Multi-table LSH recall contract: at the checked operating point
     (bits=3, tables=12) recall@5 over 20 queries of the embeddings
