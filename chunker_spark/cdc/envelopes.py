@@ -270,11 +270,6 @@ def _event_projection(op, seq, ts, img, extra=()) -> tuple:
     )
 
 
-def _project_event(parsed: DataFrame, op, seq, ts, img, extra=()) -> DataFrame:
-    """Common projection from a parsed envelope to EVENT_SCHEMA order."""
-    return parsed.select(*_event_projection(op, seq, ts, img, extra))
-
-
 # Per-process parser-plan cache. A parser's expression tree depends
 # ONLY on (value_col, option flags) — never on the input DataFrame —
 # yet it was re-built Column by Column on every call: ~150-250 py4j

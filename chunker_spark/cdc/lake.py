@@ -373,9 +373,7 @@ class LakeTable:
             .select(*[F.col(f.name) for f in TABLE_SCHEMA.fields])
         )
 
-    def changes(
-        self, since: int, until: int | None = None, include_preimages: bool = False
-    ) -> DataFrame:
+    def changes(self, since: int, until: int | None = None) -> DataFrame:
         """Change-data-feed read: net row-level changes between commit
         ``since`` (exclusive) and ``until`` (inclusive; None = current)
         — the Iceberg/Delta incremental-consumption surface, so a
@@ -389,14 +387,6 @@ class LakeTable:
         data never shuffles. ``_change_type`` is insert /
         update_postimage / delete; delete rows carry the key with null
         payload.
-
-        ``include_preimages=True`` is full Delta-CDF parity for
-        consumers that need retractions (windowed aggregates, joins
-        maintained incrementally): every update additionally emits an
-        ``update_preimage`` row with the OLD payload, and delete rows
-        carry the OLD payload instead of nulls. Same scale shape — the
-        old payload is joined back from the ``since`` state for the
-        changed keys only.
         """
         new_res = resolve_state(self.read_files(at=until), drop_tombstones=False)
         old_res = resolve_state(self.read_files(at=since), drop_tombstones=False)
@@ -415,62 +405,26 @@ class LakeTable:
         )
         changed = j.withColumn("_change_type", change).where(F.col("_change_type").isNotNull())
         payload_cols = [f.name for f in TABLE_SCHEMA.fields]
-        if not include_preimages:
-            # Single-subtree shape: the former two-branch union
-            # (upserts inner-joined to visible keys + deletes projected
-            # from the diff) referenced the diff twice, and Catalyst
-            # planned the whole full-outer resolve subtree PER branch.
-            # One LEFT payload join onto ALL changed rows instead:
-            # delete rows null their payload conditionally (an aged-out
-            # key is absent from the new state and nulls naturally),
-            # and both join inputs are already hash-partitioned by key
-            # from the resolves, so no new Exchange appears.
-            is_del = F.col("_change_type") == "delete"
-            npay = new_res.drop("deleted").withColumnRenamed("seq", "__nseq")
-            return changed.join(npay, list(KEY_COLS), "left").select(
-                *KEY_COLS,
-                *[
-                    F.when(is_del, F.lit(None).cast(TABLE_SCHEMA[c].dataType))
-                    .otherwise(F.col(c))
-                    .alias(c)
-                    for c in payload_cols
-                    if c not in KEY_COLS
-                ],
-                F.when(is_del, F.coalesce(F.col("new_seq"), F.col("old_seq")))
-                .otherwise(F.col("__nseq"))
-                .alias("seq"),
-                F.col("_change_type"),
-            )
-        visible = changed.where(F.col("_change_type") != "delete").select(
-            *KEY_COLS, "_change_type"
-        )
-        upserts = new_res.join(visible, list(KEY_COLS), "inner").select(
-            *payload_cols, F.col("seq"), F.col("_change_type")
-        )
-        # OLD payloads, joined back for the changed keys only: the
-        # update_preimage companion rows plus the pre-delete values
-        # on delete rows (Delta CDF emits both; a retraction-based
-        # consumer subtracts the preimage and adds the postimage)
-        pre_keys = changed.where(
-            F.col("_change_type").isin("update_postimage", "delete")
-        ).select(*KEY_COLS, "_change_type")
-        old_payloads = old_res.join(pre_keys, list(KEY_COLS), "inner")
-        preimages = old_payloads.where(
-            F.col("_change_type") == "update_postimage"
-        ).select(
-            *payload_cols, F.col("seq"), F.lit("update_preimage").alias("_change_type")
-        )
-        deletes = old_payloads.where(F.col("_change_type") == "delete").select(
-            *payload_cols, F.col("seq"), F.col("_change_type")
-        )
-        # column-metadata marker: retraction-based consumers
-        # (ops/incremental.update_window_counts) refuse a feed
-        # without it — a preimage-less interval corrupts their
-        # state silently, so the misuse must be loud
-        return (
-            upserts.unionByName(preimages)
-            .unionByName(deletes)
-            .withMetadata("_change_type", {"cdf_preimages": True})
+        # One LEFT payload join onto all changed rows: delete rows null
+        # their payload conditionally (an aged-out key is absent from
+        # the new state and nulls naturally), and both join inputs are
+        # already hash-partitioned by key from the resolves, so no new
+        # Exchange appears.
+        is_del = F.col("_change_type") == "delete"
+        npay = new_res.drop("deleted").withColumnRenamed("seq", "__nseq")
+        return changed.join(npay, list(KEY_COLS), "left").select(
+            *KEY_COLS,
+            *[
+                F.when(is_del, F.lit(None).cast(TABLE_SCHEMA[c].dataType))
+                .otherwise(F.col(c))
+                .alias(c)
+                for c in payload_cols
+                if c not in KEY_COLS
+            ],
+            F.when(is_del, F.coalesce(F.col("new_seq"), F.col("old_seq")))
+            .otherwise(F.col("__nseq"))
+            .alias("seq"),
+            F.col("_change_type"),
         )
 
     # ---- writes ----------------------------------------------------

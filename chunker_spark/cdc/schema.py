@@ -9,12 +9,6 @@ Evolution history used by the fixtures (FIXTURES.md §C):
   v1: (repo, path, commit, lang, content)
   v2: + branch (default 'main' for older rows)
   v3: lang renamed to language (same field id)
-
-The third evolution class — safe type WIDENING across writer
-generations (int→long, float→double, decimal precision growth) — lives
-in ``widening.py``: promotion validation plus the scan-time parquet
-widening proof that keeps old narrow files readable under the evolved
-declared schema without a rewrite.
 """
 
 from __future__ import annotations

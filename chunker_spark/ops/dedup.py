@@ -149,8 +149,7 @@ def band_rows(
 ) -> DataFrame:
     """Fixed-width LSH band rows (id..., band, bkt) from a signature
     frame — the full signature array never enters the candidate
-    shuffle; it rejoins at verify. Shared by the batch pair op and the
-    incrementally-maintained signature store."""
+    shuffle; it rejoins at verify."""
     return sig_df.select(
         *id_cols,
         F.explode(

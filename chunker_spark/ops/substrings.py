@@ -64,10 +64,7 @@ from ..functions.text import _bind
 def window_digests(text_col, k: int):
     """array<string> of md5 digests, one per k-token window of the
     document (0-based window i digests tokens [i, i+k)); empty when the
-    document has fewer than k tokens. The shared digesting expression
-    of the batch strike and the CDF-maintained window-count store —
-    both MUST tokenize/digest identically or incremental maintenance
-    diverges from recompute."""
+    document has fewer than k tokens."""
     words = F.split(F.trim(F.col(text_col) if isinstance(text_col, str) else text_col), r"\s+")
     return _bind(words, lambda ws: F.when(
         F.size(ws) >= k,

@@ -795,215 +795,6 @@ def test_processing_time_deadline_undershoot_detectable(spark, tmp_path):
     assert run["batches"] == stream.batches_seen < 999
 
 
-def test_fingerprint_store_incremental_equals_recompute(spark, tmp_path):
-    """The distributed incremental-dedup consumer: a parquet-persisted
-    (key, fp) store maintained ONLY from changes(since, until) equals a
-    full fingerprint recompute of the resolved table after every commit
-    — through updates, deletes, re-creates and compaction. Re-running a
-    refresh at the same commit is a no-op (exactly-once), and dup
-    groups derived from the store match the direct groupBy."""
-    from chunker_spark.ops.incremental import FingerprintStore, dup_groups
-
-    events = list(gen_events_local(SPEC, 240))
-    lake = LakeTable(spark, str(tmp_path / "lake"), num_buckets=4, compact_threshold=3)
-    store = FingerprintStore(spark, str(tmp_path / "fps"))
-
-    for i, lo in enumerate(range(0, 240, 60)):
-        apply_batch(lake, _events_df(spark, events[lo : lo + 60]), f"fp{i}", params=PARAMS)
-        res = store.refresh(lake)
-        assert res["applied"] is True
-        # idempotent: same commit -> no-op
-        res2 = store.refresh(lake)
-        assert res2["applied"] is False and res2["to"] == res["to"]
-
-        got = {
-            tuple(r): None
-            for r in store.read().select("repo", "path", "fp").collect()
-        }
-        want = {
-            tuple(r): None
-            for r in lake.read()
-            .select("repo", "path", F.sha2(F.col("content").cast("binary"), 256).alias("fp"))
-            .collect()
-        }
-        assert got == want, f"commit interval {i}"
-
-    # dup groups from the store == direct fingerprint groupBy on the table
-    got_groups = {
-        (r["fp"], r["n_copies"]) for r in dup_groups(store.read()).collect()
-    }
-    want_groups = {
-        (r["fp"], r["n"])
-        for r in lake.read()
-        .groupBy(F.sha2(F.col("content").cast("binary"), 256).alias("fp"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .where(F.col("n") > 1)
-        .collect()
-    }
-    assert got_groups == want_groups
-
-
-def test_fingerprint_store_update_plan_content_free(spark, tmp_path):
-    """Scale shape of one store update: the touched-key retraction is a
-    BROADCAST anti-join (an interval is batch-sized) and no Exchange
-    carries the content column — only fixed-width key+fp rows move."""
-    from chunker_spark.ops.incremental import update_fingerprint_store
-
-    events = list(gen_events_local(SPEC, 120))
-    lake = LakeTable(spark, str(tmp_path / "lake"), num_buckets=4)
-    apply_batch(lake, _events_df(spark, events[:60]), "p0", params=PARAMS)
-    c0 = lake.current_commit()["commit_seq"]
-    store0 = lake.read().select(
-        "repo", "path", F.sha2(F.col("content").cast("binary"), 256).alias("fp")
-    )
-    apply_batch(lake, _events_df(spark, events[60:]), "p1", params=PARAMS)
-    c1 = lake.current_commit()["commit_seq"]
-    updated = update_fingerprint_store(store0, lake.changes(since=c0, until=c1))
-
-    jmode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("simple")
-    plan = updated._jdf.queryExecution().explainString(jmode)
-    assert "BroadcastExchange" in plan
-    for line in plan.splitlines():
-        if "Exchange hashpartitioning" in line:
-            assert "content#" not in line, line
-
-
-def test_changes_with_preimages_full_delta_cdf_parity(spark, tmp_path):
-    """changes(include_preimages=True): every update emits an
-    update_preimage row whose payload IS the old resolved state, delete
-    rows carry the pre-delete payload (not nulls), inserts are
-    unchanged — the retraction surface an incrementally-maintained
-    aggregate needs. Checked against the replay oracle's two states."""
-    events = list(gen_events_local(SPEC, 300))
-    lake = LakeTable(spark, str(tmp_path / "lake"), num_buckets=4)
-    apply_batch(lake, _events_df(spark, events[:150]), "c0", params=PARAMS)
-    apply_batch(lake, _events_df(spark, events[150:300]), "c1", params=PARAMS)
-
-    old = {(r["repo"], r["path"]): r["content_sha256"] for r in state_rows(replay(events[:150]))}
-    new = {(r["repo"], r["path"]): r["content_sha256"] for r in state_rows(replay(events))}
-
-    rows = lake.changes(since=0, include_preimages=True).collect()
-    by_type: dict = {}
-    for r in rows:
-        by_type.setdefault(r["_change_type"], {})[(r["repo"], r["path"])] = r["content_sha256"]
-
-    # every update_postimage key has exactly one preimage companion,
-    # and the preimage payload is the OLD state's content
-    posts = by_type.get("update_postimage", {})
-    pres = by_type.get("update_preimage", {})
-    assert set(pres) == set(posts)
-    for k, sha in pres.items():
-        assert sha == old[k], k
-        assert posts[k] == new[k], k
-    # deletes carry the pre-delete payload
-    dels = by_type.get("delete", {})
-    assert set(dels) == old.keys() - new.keys()
-    for k, sha in dels.items():
-        assert sha == old[k] and sha is not None, k
-    # inserts unchanged vs the default path
-    ins = by_type.get("insert", {})
-    for k, sha in ins.items():
-        assert k not in old and sha == new[k]
-    # the default path is untouched: same visible change set, null deletes
-    plain = lake.changes(since=0).collect()
-    assert {(r["repo"], r["path"], r["_change_type"]) for r in plain} == {
-        (r["repo"], r["path"], r["_change_type"])
-        for r in rows
-        if r["_change_type"] != "update_preimage"
-    }
-
-
-def test_signature_store_incremental_equals_recompute(spark, tmp_path):
-    """The near-dup sibling of the fingerprint store: a parquet-
-    persisted (key, minhash sig) store maintained ONLY from CDF
-    intervals equals a full signature recompute of the resolved table
-    after every commit (signatures are deterministic given the seed),
-    and a refresh at the same commit is a no-op."""
-    from chunker_spark.ops.dedup import minhash_udf
-    from chunker_spark.ops.incremental import SignatureStore
-
-    events = list(gen_events_local(SPEC, 180))
-    lake = LakeTable(spark, str(tmp_path / "lake"), num_buckets=4, compact_threshold=3)
-    store = SignatureStore(spark, str(tmp_path / "sigs"), num_hashes=32, bands=8)
-
-    mk_sig = minhash_udf(32, 5, 1)
-    for i, lo in enumerate(range(0, 180, 60)):
-        apply_batch(lake, _events_df(spark, events[lo : lo + 60]), f"sg{i}", params=PARAMS)
-        assert store.refresh(lake)["applied"] is True
-        assert store.refresh(lake)["applied"] is False
-        got = {
-            (r["repo"], r["path"]): tuple(r["sig"])
-            for r in store.read().collect()
-        }
-        want = {
-            (r["repo"], r["path"]): tuple(r["sig"])
-            for r in lake.read()
-            .select("repo", "path", mk_sig(F.col("content")).alias("sig"))
-            .collect()
-        }
-        assert got == want, f"commit interval {i}"
-
-
-def test_signature_store_probe_finds_cross_commit_near_dups(spark, tmp_path):
-    """The incremental near-dup query: commit 2 ingests a near-copy of
-    a commit-1 document; probing the store with ONLY the interval's
-    upserted keys surfaces the (new, old) pair — without re-shingling
-    the old corpus — and the pair agrees with the batch
-    minhash_lsh_pairs answer over the full resolved table."""
-    import pandas as pd
-
-    from chunker_spark.cdc import EVENT_SCHEMA
-    from chunker_spark.ops.dedup import minhash_lsh_pairs
-    from chunker_spark.ops.incremental import SignatureStore
-
-    base_text = ("the quick brown fox jumps over the lazy dog again and again " * 8)
-
-    def ev(seq, path, content):
-        return {
-            "repo": "r1", "path": path, "commit": f"c{seq}", "language": "text",
-            "lang": None, "branch": "main", "op": "U", "seq": seq,
-            "ts": pd.Timestamp("2024-01-01") + pd.Timedelta(seconds=seq),
-            "content": content, "schema_ver": 3,
-        }
-
-    lake = LakeTable(spark, str(tmp_path / "lake"), num_buckets=2)
-    store = SignatureStore(spark, str(tmp_path / "sigs"), num_hashes=64, bands=16)
-
-    b1 = [ev(1, "orig.txt", base_text), ev(2, "other.txt", "completely different content " * 20)]
-    pdf1 = pd.DataFrame(b1)[[f.name for f in EVENT_SCHEMA.fields]]
-    apply_batch(lake, spark.createDataFrame(pdf1, EVENT_SCHEMA), "b1", params=PARAMS)
-    store.refresh(lake)
-    prev = store.last_applied()
-
-    near_copy = base_text.replace("lazy", "sleepy", 1)  # one-word edit
-    b2 = [ev(3, "copy.txt", near_copy), ev(4, "fresh.txt", "unrelated new material " * 25)]
-    pdf2 = pd.DataFrame(b2)[[f.name for f in EVENT_SCHEMA.fields]]
-    apply_batch(lake, spark.createDataFrame(pdf2, EVENT_SCHEMA), "b2", params=PARAMS)
-    interval = lake.changes(since=prev)
-    store.refresh(lake)
-
-    probe = interval.where(F.col("_change_type") != "delete").select("repo", "path")
-    pairs = {
-        (r["key_a"], r["key_b"]): r["jaccard_est"]
-        for r in store.near_dups(threshold=0.5, probe=probe).collect()
-    }
-    key = ("r1\x1fcopy.txt", "r1\x1forig.txt")
-    assert key in pairs and pairs[key] >= 0.5
-    # probe mode never pairs two old keys: every pair involves a probe key
-    probe_keys = {"r1\x1fcopy.txt", "r1\x1ffresh.txt"}
-    assert all(a in probe_keys or b in probe_keys for a, b in pairs)
-    # agreement with the batch op over the full resolved state
-    docs = lake.read().select(
-        F.concat_ws("\x1f", "repo", "path").alias("doc_id"), F.col("content").alias("text")
-    )
-    batch_pairs = {
-        tuple(sorted((r["id_a"], r["id_b"])))
-        for r in minhash_lsh_pairs(docs, num_hashes=64, bands=16, threshold=0.5).collect()
-    }
-    probe_batch = {p for p in batch_pairs if p[0] in probe_keys or p[1] in probe_keys}
-    assert set(pairs) == probe_batch
-
-
 def test_replay_dlq_exactly_once_and_requarantine(spark, tmp_path):
     """The dead-letter replay path: a wire ingest quarantines payloads
     it cannot parse; after the 'fix' (here: the payloads were Maxwell
@@ -1072,170 +863,6 @@ def test_replay_dlq_exactly_once_and_requarantine(spark, tmp_path):
     shutil.rmtree(f"{lake.root}/dlq")
     res4 = replay_dlq(lake, "maxwell", params=params)
     assert res4 == {"replayed": 0, "still_bad": 0, "batch_id": None, "commit": None}
-
-
-def test_signature_store_rejects_param_mismatch(spark, tmp_path):
-    """Reopening a SignatureStore with different MinHash parameters
-    must be a hard error — an incremental refresh would otherwise mix
-    incomparable signatures into one table."""
-    from chunker_spark.ops.incremental import SignatureStore
-
-    events = list(gen_events_local(SPEC, 60))
-    lake = LakeTable(spark, str(tmp_path / "lake"), num_buckets=2)
-    apply_batch(lake, _events_df(spark, events), "p0", params=PARAMS)
-    store = SignatureStore(spark, str(tmp_path / "sigs"), num_hashes=32, bands=8)
-    assert store.refresh(lake)["applied"] is True
-
-    reopened = SignatureStore(spark, str(tmp_path / "sigs"), num_hashes=64, bands=16)
-    with pytest.raises(ValueError, match="re-bootstrap"):
-        reopened.refresh(lake)
-    with pytest.raises(ValueError, match="re-bootstrap"):
-        reopened.read()
-    # same params: fine (bands is a QUERY-time knob, not signature state)
-    same = SignatureStore(spark, str(tmp_path / "sigs"), num_hashes=32, bands=4)
-    assert same.refresh(lake)["applied"] is False
-
-
-def test_window_count_store_incremental_equals_recompute(spark, tmp_path):
-    """The CDF-maintained substring-window index: (digest, count) state
-    maintained ONLY from changes(..., include_preimages=True) — +1 per
-    window of every postimage, -1 per window of every preimage/delete —
-    equals a full window recount of the resolved table after every
-    commit, through updates, deletes and re-creates; refresh is
-    exactly-once; the derived duplicated-window set matches a direct
-    batch recount."""
-    from chunker_spark.ops.incremental import WindowCountStore
-    from chunker_spark.ops.substrings import window_digests
-
-    K = 4
-    events = list(gen_events_local(SPEC, 240))
-    lake = LakeTable(spark, str(tmp_path / "lake"), num_buckets=4, compact_threshold=3)
-    store = WindowCountStore(spark, str(tmp_path / "wcs"), k=K)
-
-    def recount():
-        return {
-            (r["h"], r["n"])
-            for r in lake.read()
-            .select(F.explode(window_digests("content", K)).alias("h"))
-            .groupBy("h")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-
-    for i, lo in enumerate(range(0, 240, 60)):
-        apply_batch(lake, _events_df(spark, events[lo : lo + 60]), f"wc{i}", params=PARAMS)
-        res = store.refresh(lake)
-        assert res["applied"] is True
-        assert store.refresh(lake)["applied"] is False  # exactly-once
-        got = {(r["h"], r["n"]) for r in store.read().collect()}
-        assert got == recount(), f"commit interval {i}"
-
-    dup_got = {(r["h"], r["n"]) for r in store.dup_windows().collect()}
-    dup_want = {(h, n) for (h, n) in recount() if n >= 2}
-    assert dup_got == dup_want
-    # params pinned: reopening with a different k is a hard error
-    import pytest
-
-    with pytest.raises(ValueError, match="re-bootstrap"):
-        WindowCountStore(spark, str(tmp_path / "wcs"), k=K + 1).read()
-
-
-def test_probe_window_duplicates_against_store(spark, tmp_path):
-    """Probe-mode: a new batch checked against the maintained window
-    index flags exactly the documents repeating corpus content — a doc
-    duplicating an ingested doc reads dup_fraction 1.0, fresh content
-    0.0, a half-copy in between; sub-k docs report zero windows."""
-    from datetime import datetime, timezone
-
-    from chunker_spark.ops.incremental import WindowCountStore, probe_window_duplicates
-
-    K = 4
-    base = "alpha beta gamma delta epsilon zeta eta theta"
-    lake = LakeTable(spark, str(tmp_path / "lake"), num_buckets=2)
-    ev = [
-        {"op": "I", "repo": "r", "path": f"p{i}", "commit": "c", "lang": "py",
-         "content": base if i < 2 else f"unique{i} " * 8, "seq": i,
-         "ts": datetime(2026, 1, 1, tzinfo=timezone.utc), "schema_ver": 1,
-         "language": None, "branch": None}
-        for i in range(4)
-    ]
-    import pandas as pd
-
-    pdf = pd.DataFrame(ev)[[f.name for f in EVENT_SCHEMA.fields]]
-    apply_batch(lake, spark.createDataFrame(pdf, EVENT_SCHEMA), "b0", params=PARAMS)
-    store = WindowCountStore(spark, str(tmp_path / "wcs"), k=K)
-    store.refresh(lake)
-
-    probe = spark.createDataFrame(
-        [
-            ("r", "new-full-copy", base),                      # every window dup
-            ("r", "new-fresh", "nothing here matches at all ok"),
-            ("r", "new-half", base.split(" ", 4)[-1] + " x y z w"),  # some windows
-            ("r", "new-short", "too short"),                   # < k tokens
-        ],
-        "repo string, path string, content string",
-    )
-    got = {
-        r.path: (r.n_windows, r.n_dup_windows, r.dup_fraction)
-        for r in probe_window_duplicates(store, probe, k=K).collect()
-    }
-    assert got["new-full-copy"][2] == 1.0 and got["new-full-copy"][0] == 5
-    assert got["new-fresh"][1] == 0 and got["new-fresh"][2] == 0.0
-    assert got["new-short"] == (0, 0, 0.0)
-    # 8 tokens -> 5 windows; exactly window 0 ("epsilon zeta eta
-    # theta") also occurs in the ingested base document
-    assert got["new-half"] == (5, 1, 1 / 5)
-
-    import pytest
-
-    # a store pins k: probing with a different explicit k would compute
-    # digests that never match the index (silent zero-dup report), so
-    # it is a hard error; omitting k uses the pinned value (asserted
-    # above — the call passed k=K which equals the pin)
-    with pytest.raises(ValueError, match="pinned k"):
-        probe_window_duplicates(store, probe, k=K + 1)
-    with pytest.raises(ValueError, match="pinned content_col"):
-        probe_window_duplicates(store, probe, content_col="text")
-
-
-def test_window_count_guards(spark, tmp_path):
-    """Misuse guards around the retractable window-count state: a
-    changes frame read without include_preimages is rejected (it would
-    corrupt counts silently — deletes lose their retraction), k < 1 is
-    rejected at construction, and a lazy read() frame stays collectable
-    across ONE subsequent refresh (the GC keeps the predecessor
-    generation exactly for handed-out frames)."""
-    import pytest
-
-    from chunker_spark.ops.incremental import WindowCountStore, update_window_counts
-
-    with pytest.raises(ValueError, match="k must be >= 1"):
-        WindowCountStore(spark, str(tmp_path / "bad"), k=0)
-
-    events = list(gen_events_local(SPEC, 120))
-    lake = LakeTable(spark, str(tmp_path / "lake"), num_buckets=2)
-    apply_batch(lake, _events_df(spark, events[:60]), "g0", params=PARAMS)
-    store = WindowCountStore(spark, str(tmp_path / "wcs"), k=4)
-    store.refresh(lake)
-
-    c0 = lake.current_commit()["commit_seq"]
-    apply_batch(lake, _events_df(spark, events[60:]), "g1", params=PARAMS)
-    c1 = lake.current_commit()["commit_seq"]
-    # preimage-less feed -> loud error, not silent drift
-    no_pre = lake.changes(since=c0, until=c1)
-    with pytest.raises(ValueError, match="include_preimages"):
-        update_window_counts(store.read(), no_pre, k=4)
-    # the marked feed passes the guard; assume_preimages bypasses it
-    # for hand-built frames
-    with_pre = lake.changes(since=c0, until=c1, include_preimages=True)
-    update_window_counts(store.read(), with_pre, k=4)
-    update_window_counts(store.read(), no_pre.limit(0), k=4, assume_preimages=True)
-
-    # generation GC: a frame read before a refresh survives it
-    held = store.read()
-    store.refresh(lake)
-    held.count()  # predecessor directory must still exist
-    assert store.refresh(lake)["applied"] is False
 
 
 def test_metrics_path_one_action_and_exact_values(spark, tmp_path, monkeypatch):
