@@ -84,9 +84,7 @@ class IngestStream:
         checkpoint_dir: str,
         params: ChunkerParams = SOURCE_PARAMS,
         max_files_per_trigger: int | None = None,
-        max_bytes_per_trigger: int | None = None,  # bytes, e.g. 512 << 20 — the 10^10-scale knob
         fail_after_batches: int | None = None,  # test hook: simulated crash
-        dedup_watermark: str | None = None,  # e.g. "10 minutes"
         expire_every: int | None = None,  # run commit expiry every N commits
         expire_keep_last: int = 8,  # retained time-travel window
         wire_format: str | None = None,  # None (typed parquet) | any envelopes.WIRE_PARSERS key
@@ -106,13 +104,7 @@ class IngestStream:
         self.checkpoint_dir = checkpoint_dir
         self.params = params
         self.max_files_per_trigger = max_files_per_trigger
-        # at production scale micro-batches are bounded by BYTES, not
-        # file count: segment sizes vary, and the LWW exchange, the
-        # chunking UDF's Arrow batches and executor memory all scale
-        # with batch volume
-        self.max_bytes_per_trigger = max_bytes_per_trigger
         self.fail_after_batches = fail_after_batches
-        self.dedup_watermark = dedup_watermark
         # amortized maintenance: without expiry a long-running stream
         # accumulates every commit JSON + every superseded data file
         # (they back time travel); expire_every bounds both while
@@ -126,11 +118,6 @@ class IngestStream:
             raise ValueError(
                 f"unknown wire_format {wire_format!r} (one of {sorted(WIRE_PARSERS)})"
             )
-        if wire_format and dedup_watermark:
-            # the raw wire stream has no ts/seq until the per-batch
-            # parse, so watermark dedup can't run pre-parse; duplicate
-            # *batches* are still no-ops via the commit ledger
-            raise ValueError("dedup_watermark requires the typed-parquet source")
         self.wire_format = wire_format
         if source not in ("files", "kafka"):
             raise ValueError(f"unknown source {source!r}")
@@ -143,10 +130,10 @@ class IngestStream:
                     "source='kafka' requires wire_format "
                     f"(one of {sorted(WIRE_PARSERS)})"
                 )
-            if max_files_per_trigger or max_bytes_per_trigger:
+            if max_files_per_trigger:
                 raise ValueError(
-                    "max_files/bytes_per_trigger are file-source knobs; "
-                    "use kafka_options={'max_offsets_per_trigger': N}"
+                    "file-source knobs (max_files_per_trigger) do not apply to "
+                    "kafka; use kafka_options={'max_offsets_per_trigger': N}"
                 )
             if not (kafka_bootstrap_servers and kafka_topic):
                 raise ValueError("source='kafka' requires kafka_bootstrap_servers and kafka_topic")
@@ -393,22 +380,10 @@ class IngestStream:
             reader = self.spark.readStream.schema(EVENT_SCHEMA)
         if self.max_files_per_trigger:
             reader = reader.option("maxFilesPerTrigger", self.max_files_per_trigger)
-        if self.max_bytes_per_trigger:
-            reader = reader.option("maxBytesPerTrigger", int(self.max_bytes_per_trigger))
         if self.wire_format:
             stream = reader.text(self.events_dir)
         else:
             stream = reader.parquet(self.events_dir)
-        if self.dedup_watermark:
-            # event-time dedup for at-least-once upstream producers:
-            # duplicate seq values within the watermark are dropped.
-            # dropDuplicatesWithinWatermark evicts per-seq state once the
-            # watermark passes — plain dropDuplicates(["seq"]) would keep
-            # state forever because the event-time column is not in the
-            # dedup subset. (Idempotent commits remain the primary
-            # exactly-once mechanism — this guards the producer side.)
-            stream = stream.withWatermark("ts", self.dedup_watermark)
-            stream = stream.dropDuplicatesWithinWatermark(["seq"])
         return stream.writeStream.foreachBatch(self._handle_batch).option(
             "checkpointLocation", self.checkpoint_dir
         )

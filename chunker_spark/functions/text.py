@@ -22,6 +22,26 @@ def _bind(value: Column, body) -> Column:
     return F.element_at(F.transform(F.array(value), body), 1)
 
 
+def _words(text_col) -> Column:
+    c = F.col(text_col) if isinstance(text_col, str) else text_col
+    return F.filter(F.split(F.lower(c), r"\W+"), lambda x: x != "")
+
+
+def word_ngrams(words_col, n: int) -> Column:
+    """Order-sensitive word n-grams (space-joined strings) from an
+    array<string> column or expression, evaluated once per row. Empty
+    array when the document has fewer than ``n`` words (guards
+    sequence()'s descending-range behavior on start > stop)."""
+    w = F.col(words_col) if isinstance(words_col, str) else words_col
+    return _bind(w, lambda ws: F.when(
+        F.size(ws) >= n,
+        F.transform(
+            F.sequence(F.lit(1), F.size(ws) - (n - 1)),
+            lambda i: F.array_join(F.slice(ws, i, n), " "),
+        ),
+    ).otherwise(F.array().cast("array<string>")))
+
+
 # ---- token counting -------------------------------------------------
 
 #: BPE-ish pre-tokenizer: word pieces, numbers, or single non-space
@@ -142,8 +162,6 @@ def dup_ngram_fraction(col: str | Column, n: int = 2) -> Column:
     occurrence: 1 − distinct/total over order-sensitive word n-grams
     (Gopher's duplicate-n-gram family; the line filter is blind to
     single-line boilerplate, this isn't). 0.0 when fewer than n words."""
-    from ..ops.decontaminate import _words, word_ngrams
-
     return _bind(word_ngrams(_words(col), n), lambda grams: F.when(
         F.size(grams) > 0,
         F.round(F.lit(1.0) - F.size(F.array_distinct(grams)) / F.size(grams), 6),

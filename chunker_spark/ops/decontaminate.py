@@ -14,7 +14,10 @@ fixed-width (doc_id, count) partial aggregates. Tokenization and gram
 assembly are pure JVM higher-order functions (split → filter → slice →
 array_join) — no Python, no O(words²) re-evaluation (``word_ngrams``
 binds its word array to a lambda variable, so the split runs once per
-row, not once per gram position).
+row, not once per gram position). Both come from ``functions.text``,
+shared with ``dup_ngram_fraction``, simhash and the pair-dedup gram
+sets (``window_digests`` reuses ``word_ngrams`` over its own ``\\s+``
+tokens).
 
 Contamination is measured over DISTINCT doc grams so in-document
 repetition can't inflate the score: ``contamination = |distinct grams
@@ -26,27 +29,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from ..functions.text import _bind
-
-
-def word_ngrams(words_col, n: int) -> Column:
-    """Order-sensitive word n-grams (space-joined strings) from an
-    array<string> column or expression, evaluated once per row. Empty
-    array when the document has fewer than ``n`` words (guards
-    sequence()'s descending-range behavior on start > stop)."""
-    w = F.col(words_col) if isinstance(words_col, str) else words_col
-    return _bind(w, lambda ws: F.when(
-        F.size(ws) >= n,
-        F.transform(
-            F.sequence(F.lit(1), F.size(ws) - (n - 1)),
-            lambda i: F.array_join(F.slice(ws, i, n), " "),
-        ),
-    ).otherwise(F.array().cast("array<string>")))
-
-
-def _words(text_col) -> Column:
-    c = F.col(text_col) if isinstance(text_col, str) else text_col
-    return F.filter(F.split(F.lower(c), r"\W+"), lambda x: x != "")
+from ..functions.text import _words, word_ngrams
 
 
 def ngram_contamination(

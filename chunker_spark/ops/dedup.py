@@ -3,7 +3,7 @@
 Each returns a DataFrame transformation built from stock Spark ops so
 Catalyst plans them (hash aggregates with partial combine, broadcastable
 joins). Python is entered only through Arrow-vectorized pandas UDFs —
-MinHash signatures, word-n-gram shingling — and through the blocked
+MinHash signatures, hyperplane signatures — and through the blocked
 numpy matmul of the exact embedding-dedup baseline (applyInPandas);
 every join, filter, aggregate, and verification stays JVM-side.
 
@@ -23,8 +23,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import ArrayType, LongType
 
-from ..functions.text import _bind
-from .decontaminate import _words
+from ..functions.text import _bind, _words, word_ngrams
 
 # ---- exact dedup -----------------------------------------------------
 
@@ -326,18 +325,18 @@ def embedding_near_dup_pairs(
     all-pairs evaluation. Returns (id_a, id_b, cosine) with
     id_a < id_b, round(cosine, 6) >= threshold.
     """
-    from .similarity import _dot, _norm, hyperplane_signature_udf
+    from .similarity import _dot, _norm, hyperplane_signatures_udf
 
     v = vectors.select(F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v"))
     if bits > 0:
-        sig = hyperplane_signature_udf(dim, bits)
+        sig = hyperplane_signatures_udf(dim, bits)
         # eager localCheckpoint like the minhash signature frame: the
         # bucket self-join references this frame on BOTH sides, and
         # without pinning it Catalyst duplicates the whole signature-UDF
         # subtree — two full Arrow passes over the corpus (plan-audited:
         # 2x ArrowEvalPython, 2x the source scans). Fixed-width
         # (id, bucket) rows only; vectors still rejoin at verify.
-        b = v.select("id", sig(F.col("v")).alias("bucket")).localCheckpoint(eager=True)
+        b = v.select("id", sig(F.col("v"))[0].alias("bucket")).localCheckpoint(eager=True)
         if max_bucket is not None:
             b = _cap_hot_buckets(b, ["bucket"], max_bucket, "embedding_near_dup_pairs")
         cand = (
@@ -429,39 +428,29 @@ def simhash_expr(text_col, bits: int = 64) -> F.Column:
     ))
 
 
-def _word_ngram_udf(n: int, max_ngrams: int | None = None):
-    """Pandas UDF: text -> distinct 64-bit word-n-gram hashes (blake2b,
-    deterministic across executors/runs). ``max_ngrams`` truncates to
-    the first N positions BEFORE dedup (the documented estimate knob)."""
-    import hashlib
-    import re
+def _gram_sets(
+    df: DataFrame, text_col: str, id_col: str, n: int, max_ngrams: int | None
+) -> DataFrame:
+    """(id, grams): each document's sorted, distinct xxhash64 word-n-gram
+    hashes, built by the JVM ``word_ngrams`` over ``_words`` (the
+    ``\\W+`` tokenizer of decontamination, simhash and the SQL oracles).
+    ``max_ngrams`` truncates to the first N positions BEFORE the dedup
+    (the documented estimate knob). Zero-gram documents are dropped.
 
-    word_re = re.compile(r"\W+")
-
-    @F.pandas_udf(ArrayType(LongType()))
-    def _grams(text: pd.Series) -> pd.Series:
-        def one(t):
-            if not isinstance(t, str):
-                return []
-            ws = [w for w in word_re.split(t.lower()) if w]
-            upto = len(ws) - n + 1
-            if max_ngrams is not None:
-                upto = min(upto, max_ngrams)
-            out = []
-            seen = set()
-            for i in range(max(upto, 0)):
-                h = hashlib.blake2b(" ".join(ws[i : i + n]).encode(), digest_size=8).digest()
-                v = int.from_bytes(h, "big")
-                if v >= 1 << 63:
-                    v -= 1 << 64
-                if v not in seen:
-                    seen.add(v)
-                    out.append(v)
-            return out
-
-        return text.map(one)
-
-    return _grams
+    Eager localCheckpoint, not persist: the frame feeds the prefix
+    index and both verify sides, and persist would pin it in the
+    CacheManager until an unpersist this lazy-returning caller can
+    never issue (storage leak per call); checkpoint blocks free once
+    the result is unreferenced."""
+    grams = word_ngrams(_words(text_col), n)
+    if max_ngrams is not None:
+        grams = F.slice(grams, 1, max_ngrams)
+    hashes = F.array_sort(F.array_distinct(F.transform(grams, lambda g: F.xxhash64(g))))
+    return (
+        df.select(F.col(id_col).alias("id"), hashes.alias("grams"))
+        .where(F.size("grams") > 0)
+        .localCheckpoint(eager=True)
+    )
 
 
 def ngram_jaccard_pairs(
@@ -475,19 +464,19 @@ def ngram_jaccard_pairs(
     """Word-n-gram Jaccard similarity for candidate pairs sharing at
     least one n-gram (inverted-index join — no cross product).
 
-    Exact by default. ``max_ngrams`` caps each document to its first N
-    distinct n-grams, making scores a truncated ESTIMATE (biased low
-    for long documents) in exchange for bounding the inverted-index
-    fan-out per document — set it when running over unbounded corpora.
+    Exact by default. ``max_ngrams`` caps each document to the n-grams
+    at its first N positions, making scores a truncated ESTIMATE
+    (biased low for long documents) in exchange for bounding the
+    inverted-index fan-out per document — set it when running over
+    unbounded corpora.
 
     Scale shape — a prefix-filtered set-similarity join (AllPairs /
     PPJoin family, Bayardo et al. WWW'07):
 
-    * Shingling runs in one Arrow-vectorized pandas UDF (the equivalent
-      Catalyst higher-order-function expression re-evaluates the word
-      split per sequence element — O(words²) interpreted work per doc,
-      measured ~20s vs <1s at 10k docs); gram arrays are canonically
-      sorted, making "prefix" well defined globally.
+    * Shingling is JVM-side (``_gram_sets``: ``word_ngrams`` binds the
+      word array once per row, then xxhash64 per gram — no Python
+      stage); gram arrays are canonically sorted, making "prefix" well
+      defined globally.
     * The inverted index contains only each document's PREFIX —
       the first |g| − ⌈t·|g|⌉ + 1 grams: any pair with Jaccard ≥ t
       must share a prefix gram, so no true pair is lost, while
@@ -499,17 +488,7 @@ def ngram_jaccard_pairs(
     * Verify is exact and JVM-side: array_intersect on the two gram
       sets joined back by candidate id.
     """
-    grams_udf = _word_ngram_udf(n, max_ngrams)
-    # eager localCheckpoint, not persist: feeds the prefix index and
-    # both verify sides, and the shingle UDF is the expensive stage —
-    # but persist would pin the frame in the CacheManager until an
-    # unpersist this lazy-returning function can never issue (storage
-    # leak per call); checkpoint blocks free once the result is GC'd
-    g = (
-        df.select(F.col(id_col).alias("id"), F.array_sort(grams_udf(F.col(text_col))).alias("grams"))
-        .where(F.size("grams") > 0)
-        .localCheckpoint(eager=True)
-    )
+    g = _gram_sets(df, text_col, id_col, n, max_ngrams)
     sz = F.size("grams")
     prefix_len = (sz - F.ceil(sz * F.lit(float(threshold))) + 1).cast("int")
     pre = g.select(
@@ -573,8 +552,9 @@ def containment_pairs(
     ``max_posting`` caps pathological posting lists (ubiquitous grams)
     with a logged drop, the same contract as minhash's ``max_bucket``,
     and ``max_ngrams`` bounds per-document fan-out on unbounded
-    corpora. Verification rejoins the full sorted gram arrays and is
-    exact JVM `array_intersect` work.
+    corpora. Shingling is the same JVM ``_gram_sets`` as
+    `ngram_jaccard_pairs`; verification rejoins the full sorted gram
+    arrays and is exact JVM `array_intersect` work.
 
     Returns (id_a, id_b, containment, n_a, n_b) with id_a < id_b;
     ``n_a``/``n_b`` are the distinct-gram counts, so the smaller side
@@ -583,15 +563,7 @@ def containment_pairs(
     sub-n-word or heavily non-ASCII texts should pre-filter with the
     same tokenizer if completeness over them matters.
     """
-    grams_udf = _word_ngram_udf(n, max_ngrams)
-    g = (
-        df.select(
-            F.col(id_col).alias("id"),
-            F.array_sort(grams_udf(F.col(text_col))).alias("grams"),
-        )
-        .where(F.size("grams") > 0)
-        .localCheckpoint(eager=True)
-    )
+    g = _gram_sets(df, text_col, id_col, n, max_ngrams)
     sz = F.size("grams")
     prefix_len = (sz - F.ceil(sz * F.lit(float(threshold))) + 1).cast("int")
     probe = g.select(

@@ -66,50 +66,17 @@ def brute_force_topk(
     )
 
 
-def hyperplane_signature_udf(dim: int | None = None, bits: int = 8, seed: int = 7):
-    """Random-hyperplane LSH signature: sign pattern of ``bits``
-    projections, packed into a long. Vectorized numpy per Arrow batch.
-
-    ``dim`` may be omitted: the plane matrix is derived lazily (and
-    deterministically, from ``seed``) from the first vector's length on
-    each executor — no driver-side collect is ever needed to learn the
-    embedding dimensionality."""
-    planes_cache: dict[int, np.ndarray] = {}
-
-    def _planes(d: int) -> np.ndarray:
-        p = planes_cache.get(d)
-        if p is None:
-            p = np.random.default_rng(seed).standard_normal((d, bits)).astype(np.float32)
-            planes_cache[d] = p
-        return p
-
-    if dim is not None:
-        _planes(dim)
-
-    @F.pandas_udf(LongType())
-    def _sig(vecs: pd.Series) -> pd.Series:
-        def one(v):
-            if v is None:
-                return 0
-            a = np.asarray(v, dtype=np.float32)
-            proj = a @ _planes(len(a))
-            sig = int.from_bytes(np.packbits(proj > 0).tobytes()[:8], "big")
-            return sig & ((1 << 63) - 1)  # keep within signed LongType
-
-        return vecs.map(one)
-
-    return _sig
-
-
 def hyperplane_signatures_udf(dim: int | None = None, bits: int = 8, seed: int = 7, tables: int = 1):
-    """Multi-table variant of ``hyperplane_signature_udf``: one numpy
-    projection against a (dim, bits·tables) plane matrix per Arrow
-    batch, returning ``tables`` packed bucket signatures per vector.
-    Table 0 is bit-identical to the single-table UDF for the same seed
-    (same rng draw order). Like the single-table UDF, ``dim`` may be
-    omitted and is learned from the data executor-side."""
-    from pyspark.sql.types import ArrayType
-
+    """Random-hyperplane LSH signatures: one numpy projection against a
+    (dim, bits·tables) plane matrix per Arrow batch, returning
+    ``tables`` packed bucket signatures per vector (the sign pattern of
+    each table's ``bits`` projections, packed into a non-negative
+    long). ``tables=1`` is the single-bucket form
+    ``embedding_near_dup_pairs`` takes element 0 of. ``dim`` may be
+    omitted: the plane matrix is derived lazily (and deterministically,
+    from ``seed``) from the first vector's length on each executor — no
+    driver-side collect is ever needed to learn the embedding
+    dimensionality."""
     planes_cache: dict[int, np.ndarray] = {}
 
     def _planes(d: int) -> np.ndarray:

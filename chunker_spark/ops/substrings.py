@@ -42,14 +42,15 @@ original needs corpus-resident memory; this needs a shuffle.
 
 Composition caveat: ``clean_text`` is a nested higher-order-function
 expression (transform/filter/exists), and each token-array builder
-(``window_digests``, ``word_ngrams``, ``simhash_expr``) adds one level
-for the lambda variable its array is bound to (``_bind``). Stacking
-SEVERAL such rewrite stages lazily into one projection (e.g.
-boilerplate splice -> this -> n-gram shingling) can push Spark's
-interpreted evaluator past its nested-lambda depth (observed as
-``INTERNAL_ERROR Cannot evaluate expression`` on Spark 4.1). Persist
-a stage boundary between major rewrite stages — a lake write in
-production, ``localCheckpoint()`` in process — exactly as
+(``word_ngrams`` — behind ``window_digests``, decontamination,
+``dup_ngram_fraction`` and the pair-dedup gram sets — and
+``simhash_expr``) adds one level for the lambda variable its array is
+bound to (``_bind``). Stacking SEVERAL such rewrite stages lazily into
+one projection (e.g. boilerplate splice -> this -> n-gram shingling)
+can push Spark's interpreted evaluator past its nested-lambda depth
+(observed as ``INTERNAL_ERROR Cannot evaluate expression`` on Spark
+4.1). Persist a stage boundary between major rewrite stages — a lake
+write in production, ``localCheckpoint()`` in process — exactly as
 examples/curation_pipeline.py does.
 """
 
@@ -58,7 +59,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
-from ..functions.text import _bind
+from ..functions.text import word_ngrams
 
 
 def window_digests(text_col, k: int):
@@ -66,13 +67,7 @@ def window_digests(text_col, k: int):
     document (0-based window i digests tokens [i, i+k)); empty when the
     document has fewer than k tokens."""
     words = F.split(F.trim(F.col(text_col) if isinstance(text_col, str) else text_col), r"\s+")
-    return _bind(words, lambda ws: F.when(
-        F.size(ws) >= k,
-        F.transform(
-            F.sequence(F.lit(0), F.size(ws) - k),
-            lambda i: F.md5(F.array_join(F.slice(ws, i + 1, k), " ")),
-        ),
-    ).otherwise(F.array().cast("array<string>")))
+    return F.transform(word_ngrams(words, k), lambda w: F.md5(w))
 
 
 def duplicated_spans(

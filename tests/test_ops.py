@@ -944,6 +944,42 @@ def test_containment_pairs_brute_force(spark):
     assert got[(100, 101)] == 1.0  # verbatim embedding found at 1.0
 
 
+def test_pair_ops_shingle_with_the_jvm_word_tokenizer(spark, monkeypatch):
+    """ngram_jaccard_pairs and containment_pairs build gram sets with the
+    JVM ``_words``/``word_ngrams`` builder that decontamination and the
+    SQL oracles split words with: a non-ASCII document and its copy
+    re-joined from its own ``_words`` tokens are one gram set (Jaccard
+    1.0, containment 1.0 at equal sizes), a null text yields no pair,
+    and no plan either op runs — the checkpointed gram frame included —
+    has a Python stage."""
+    from chunker_spark.functions.text import _words
+    from chunker_spark.ops.dedup import containment_pairs
+
+    text = "Naïve café owners serve crème brûlée to über-tired señoras by the façade"
+    one = spark.createDataFrame([(0, text)], "doc_id long, text string")
+    rejoined = one.select(F.array_join(_words("text"), " ")).first()[0]
+    df = spark.createDataFrame(
+        [(0, text), (1, rejoined), (2, None)], "doc_id long, text string"
+    )
+    plans = []
+    checkpoint = type(df).localCheckpoint
+
+    def spy(self, *args, **kwargs):
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(type(df), "localCheckpoint", spy)
+    jac = ngram_jaccard_pairs(df, n=3, threshold=0.5)
+    con = containment_pairs(df, n=3, threshold=0.5)
+    assert [tuple(r) for r in jac.collect()] == [(0, 1, 1.0)]
+    (c,) = con.collect()
+    assert (c["id_a"], c["id_b"], c["containment"]) == (0, 1, 1.0)
+    assert c["n_a"] == c["n_b"] > 0
+    plans += [out._jdf.queryExecution().executedPlan().toString() for out in (jac, con)]
+    assert len(plans) == 4
+    assert not [p for p in plans if "ArrowEvalPython" in p], plans
+
+
 def test_table_diff_classes_and_null_canonicalization(spark):
     """table_diff: the three defect classes; a null column and the
     string 'null' digest differently (to_json canonicalization); equal

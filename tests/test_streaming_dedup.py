@@ -1,4 +1,5 @@
-"""Watermark + dropDuplicates producer-side dedup (SURVEY.md §2.3)."""
+"""Producer-side duplicates absorbed by last-writer-wins, and the
+event-time window/session rollups as streams (SURVEY.md §2.3)."""
 
 import glob
 import shutil
@@ -18,9 +19,11 @@ PARAMS = ChunkerParams(average_bits=9, min_size=256, max_size=4096)
 
 
 def test_duplicate_events_dropped(spark, tmp_path):
-    """Duplicate a whole segment (at-least-once producer): with
-    dedup_watermark the duplicates are dropped and the final state
-    still equals the oracle over the original stream."""
+    """Duplicate a whole segment (at-least-once producer): the copy
+    carries the same seqs, so last-writer-wins absorbs it and the final
+    state still equals the oracle over the original stream. One file
+    per trigger puts the duplicate segment in its own later batch,
+    after the rows it repeats (and newer ones) were committed."""
     spec = GenSpec(seed=5, n_keys=30, mean_blocks=3)
     events = list(gen_events_local(spec, 200))
     seg_dir = str(tmp_path / "segments")
@@ -36,8 +39,7 @@ def test_duplicate_events_dropped(spark, tmp_path):
         seg_dir,
         str(tmp_path / "ckpt"),
         params=PARAMS,
-        dedup_watermark="10 minutes",
-        max_bytes_per_trigger=1 << 30,  # exercises the size-bounded trigger
+        max_files_per_trigger=1,
     )
     stream.run_available()
 
